@@ -20,7 +20,7 @@ before it carries details (codec picked per column, input sizes).
 regenerates ``BENCHMARK.json`` from ``spec.py``.
 
 Everything the run writes stays under ``.perfbench_work/`` in the
-checkout (inputs, stores, Spark scratch, temp files, traces).
+checkout (inputs, stores, Spark local dirs, temp files, traces).
 """
 
 from __future__ import annotations
@@ -67,9 +67,8 @@ def _environment() -> None:
         "TMPDIR": tmp,
         "SPARK_LOCAL_DIRS": os.path.join(WORK, "spark-local"),
         "PYSPARK_PYTHON": sys.executable,
-        "PYSPARK_DRIVER_PYTHON": sys.executable,
-        # every JVM (launcher and driver): temp files here, and no
-        # hsperfdata files in the system temp dir
+        # every JVM Spark starts, launcher included: temp files here, and
+        # no hsperfdata files in the system temp dir
         "JAVA_TOOL_OPTIONS": f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData",
     })
 
