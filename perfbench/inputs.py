@@ -1,15 +1,15 @@
 """Seeded inputs for every phase, all drawn from ``sources.synth``.
 
-A corpus is a function of (seed, document ids): any block of ids
-regenerates the same rows, so the lookup phase checks each answer
-against rows generated afresh for the keys it asked for.
+A corpus is an ordered table of rows; the first ``n`` rows of a corpus
+depend only on (seed, shape, n). Two shapes:
 
-* ``passage_tokens=None``: one row per synthetic document, as
-  ``synth_batch`` makes it (doc_id ``doc-%012d``).
-* ``passage_tokens=P``: each synthetic document split into passages of
-  at most P tokens, one row each (doc_id ``doc-%012d-%05d``, n_tok the
-  passage length, source of the document). Generation cost stays
-  proportional to the tokens kept.
+* ``documents``: one row per synthetic document, as ``synth_batch``
+  makes it (doc_id ``doc-%012d``).
+* ``packed``: the documents' tokens concatenated in doc_id order and cut
+  into complete 512-token windows, in the row shape that
+  ``operators.packing.pack_encode_roundtrip_query`` hands to
+  ``encode_table``: doc_id the window number as a decimal string,
+  n_tok 512, source ``"packed"``.
 """
 
 from __future__ import annotations
@@ -21,105 +21,73 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
+from parquet_go_spark.operators.packing import WINDOW
 from parquet_go_spark.sources.synth import synth_batch
 
+SHAPES = ("documents", "packed")
 INPUT_FILES = 8  # one Spark scan task per file at local[<=8]
 ABSENT_SHARE = 0.1
-
-
-def _digits(vals: np.ndarray, width: int) -> np.ndarray:
-    """Zero-padded ASCII decimal digits, one row of ``width`` per value."""
-    out = np.empty((len(vals), width), dtype=np.uint8)
-    rem = vals.astype(np.int64)
-    for k in range(width - 1, -1, -1):
-        out[:, k] = rem % 10 + ord("0")
-        rem = rem // 10
-    return out
-
-
-def _split_passages(b: pa.RecordBatch, size: int) -> pa.RecordBatch:
-    n_tok = np.asarray(b.column(2), dtype=np.int64)
-    offs = np.asarray(b.column(1).offsets, dtype=np.int64)
-    per_doc = -(-n_tok // size)
-    doc = np.repeat(np.arange(len(n_tok)), per_doc)
-    first = np.zeros(len(per_doc) + 1, dtype=np.int64)
-    np.cumsum(per_doc, out=first[1:])
-    j = np.arange(len(doc)) - first[doc]
-    length = np.minimum(size, n_tok[doc] - j * size)
-    start = offs[doc] + j * size
-    new_offs = np.zeros(len(doc) + 1, dtype=np.int64)
-    np.cumsum(length, out=new_offs[1:])
-    take = np.repeat(start - new_offs[:-1], length) + np.arange(new_offs[-1])
-    values = b.column(1).values.take(pa.array(take))
-    parent = np.frombuffer(b.column(0).buffers()[2], dtype=np.uint8,
-                           count=16 * len(n_tok)).reshape(-1, 16)
-    ids = np.empty((len(doc), 22), dtype=np.uint8)
-    ids[:, :16] = parent[doc]
-    ids[:, 16] = ord("-")
-    ids[:, 17:] = _digits(j, 5)
-    doc_id = pa.Array.from_buffers(
-        pa.utf8(), len(doc),
-        [None, pa.py_buffer((np.arange(len(doc) + 1, dtype=np.int32) * 22)
-                            .tobytes()), pa.py_buffer(ids.tobytes())])
-    return pa.RecordBatch.from_arrays(
-        [doc_id,
-         pa.ListArray.from_arrays(pa.array(new_offs.astype(np.int32)), values),
-         pa.array(length.astype(np.int32)),
-         b.column(3).take(pa.array(doc))],
-        names=b.schema.names,
-    )
+# documents per synth_batch call: small blocks keep the generator's
+# temporaries below the peak RSS of the library passes it feeds
+_DOC_BLOCK = 1024
 
 
 class Corpus:
-    def __init__(self, seed: int, passage_tokens: int | None):
-        self.seed = seed
-        self.passage_tokens = passage_tokens
+    def __init__(self, seed: int, shape: str):
+        assert shape in SHAPES, shape
+        self.seed, self.shape = seed, shape
 
-    def table(self, docs: np.ndarray) -> pa.Table:
-        """The rows of documents ``docs``."""
-        b = synth_batch(np.asarray(docs, dtype=np.int64), seed=self.seed)
-        if self.passage_tokens is not None:
-            b = _split_passages(b, self.passage_tokens)
-        return pa.Table.from_batches([b])
+    def rows(self, n: int) -> pa.Table:
+        """The first ``n`` rows of the corpus."""
+        if self.shape == "documents":
+            return pa.Table.from_batches([
+                synth_batch(np.arange(lo, min(lo + _DOC_BLOCK, n),
+                                      dtype=np.int64), seed=self.seed)
+                for lo in range(0, n, _DOC_BLOCK)])
+        parts, have, lo = [], 0, 0
+        while have < n * WINDOW:
+            b = synth_batch(np.arange(lo, lo + _DOC_BLOCK, dtype=np.int64),
+                            seed=self.seed)
+            parts.append(b.column(1).values.to_numpy())
+            have += len(parts[-1])
+            lo += _DOC_BLOCK
+        flat = pa.array(np.concatenate(parts)[:n * WINDOW])
+        offsets = pa.array(np.arange(n + 1, dtype=np.int32) * WINDOW)
+        return pa.table({
+            "doc_id": pa.array(np.arange(n).astype(str)),
+            "tokens": pa.ListArray.from_arrays(offsets, flat),
+            "n_tok": pa.array(np.full(n, WINDOW, dtype=np.int32)),
+            "source": pa.array(["packed"] * n),
+        })
 
-    def sample_keys(self, rng: np.random.Generator, n_docs: int,
+    def sample_keys(self, rng: np.random.Generator, n: int,
                     k: int) -> list[str]:
-        """``k`` lookup keys over a store of documents [0, n_docs); about
-        ABSENT_SHARE of them name documents the store does not hold."""
-        docs = rng.integers(0, n_docs, size=k)
-        docs = np.where(rng.random(k) < ABSENT_SHARE, docs + n_docs, docs)
-        if self.passage_tokens is None:
-            return sorted({f"doc-{d:012d}" for d in docs})
-        # a passage of the document; absent documents have none
-        n_tok = synth_batch(docs, seed=self.seed).column(2).to_numpy()
-        part = (rng.random(k) * -(-n_tok // self.passage_tokens)).astype(int)
-        return sorted({f"doc-{d:012d}-{p:05d}" for d, p in zip(docs, part)})
+        """``k`` lookup keys over a store of rows [0, n); about
+        ABSENT_SHARE of them name rows the store does not hold."""
+        idx = rng.integers(0, n, size=k)
+        idx = np.where(rng.random(k) < ABSENT_SHARE, idx + n, idx)
+        fmt = "doc-{:012d}" if self.shape == "documents" else "{}"
+        return sorted({fmt.format(i) for i in idx})
 
-    def expected(self, keys: list[str], n_docs: int) -> list[dict]:
-        """The stored rows for ``keys`` in a store of documents
-        [0, n_docs)."""
-        docs = sorted({int(k[4:16]) for k in keys} & set(range(n_docs)))
-        if not docs:
-            return []
-        t = self.table(np.array(docs))
-        return t.filter(pc.is_in(t.column("doc_id"),
+
+def expected(table: pa.Table, keys: list[str]) -> list[dict]:
+    """The rows of ``table`` whose doc_id is one of ``keys``."""
+    return table.filter(pc.is_in(table.column("doc_id"),
                                  pa.array(keys))).to_pylist()
 
 
-def write_input(corpus: Corpus, out_dir: str, n_docs: int) -> dict:
-    """Write documents [0, n_docs) as INPUT_FILES pyarrow ZSTD+dict
-    parquet files. Returns rows, tokens, raw Arrow bytes and the file
-    bytes, which are the pyarrow ZSTD+dict reference size of the rows."""
+def write_input(table: pa.Table, out_dir: str) -> dict:
+    """Write ``table`` as INPUT_FILES pyarrow ZSTD+dict parquet files.
+    Returns rows, tokens, raw Arrow bytes and the file bytes, which are
+    the pyarrow ZSTD+dict reference size of the rows."""
     os.makedirs(out_dir, exist_ok=True)
-    bounds = np.linspace(0, n_docs, INPUT_FILES + 1).astype(np.int64)
-    n_rows = tokens = raw = size = 0
+    bounds = np.linspace(0, table.num_rows, INPUT_FILES + 1).astype(np.int64)
+    size = 0
     for i, (lo, hi) in enumerate(zip(bounds[:-1], bounds[1:])):
-        t = corpus.table(np.arange(lo, hi))
         path = os.path.join(out_dir, f"part-{i:02d}.parquet")
-        pq.write_table(t, path, compression="zstd", use_dictionary=True)
-        n_rows += t.num_rows
-        tokens += int(pc.sum(t.column("n_tok")).as_py() or 0)
-        raw += t.nbytes
+        pq.write_table(table.slice(lo, hi - lo), path, compression="zstd",
+                       use_dictionary=True)
         size += os.path.getsize(path)
-    return {"docs": n_docs, "rows": n_rows, "tokens": tokens,
-            "raw_bytes": raw, "pyarrow_zstd_bytes": size}
+    return {"rows": table.num_rows,
+            "tokens": int(pc.sum(table.column("n_tok")).as_py() or 0),
+            "raw_bytes": table.nbytes, "pyarrow_zstd_bytes": size}

@@ -4,7 +4,8 @@ Frames go through ``chunk.encode_chunk_paged`` / ``chunk.decode_chunk`` with a
 warm pick cache, as one encode task would; parquet goes through
 ``pqwriter.write_table`` / ``pqinterop.read_footer`` /
 ``pqinterop.decode_table``. ``lib_peak_rss_mb`` is the peak RSS of
-the benchmark process, which holds these row groups for the whole run.
+the benchmark process at the end of its first library block, which
+runs before anything else in the process allocates.
 """
 
 from __future__ import annotations
@@ -15,7 +16,6 @@ import resource
 import statistics
 import time
 
-import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
@@ -93,10 +93,9 @@ class LibPhase:
         self.tr = tr
         os.makedirs(work, exist_ok=True)
         self.pq_path = os.path.join(work, "lib.parquet")
-        corpus = Corpus(seed, sizes["passage_tokens"])
-        n = sizes["group_docs"]
-        tables = [corpus.table(np.arange(i * n, (i + 1) * n))
-                  for i in range(sizes["groups"])]
+        n = sizes["group_rows"]
+        rows = Corpus(seed, sizes["shape"]).rows(n * sizes["groups"])
+        tables = [rows.slice(i * n, n) for i in range(sizes["groups"])]
         self.groups = [{c: t.column(c).combine_chunks() for c in COLUMNS}
                        for t in tables]
         self.table = pa.concat_tables(tables)
@@ -115,6 +114,12 @@ class LibPhase:
         self.enc, self.dec, self.pqw, self.pqr = [], [], [], []
         self.attempted = self.failed = 0
         self.codecs = self.encoded_bytes = self.pq_bytes = None
+        self.peak_rss_mb = None
+
+    def note_peak_rss(self) -> None:
+        # ru_maxrss is in KiB on Linux
+        self.peak_rss_mb = resource.getrusage(
+            resource.RUSAGE_SELF).ru_maxrss * 1024 / MB
 
     def frame_pass(self) -> None:
         groups = self.groups
@@ -152,9 +157,7 @@ class LibPhase:
             "pq_write_mb_per_s": max(self.pqw),
             "pq_read_mb_per_s": max(self.pqr),
             "pq_size_vs_pyarrow_zstd": self.pq_bytes / self.ref_bytes,
-            # ru_maxrss is in KiB on Linux
-            "lib_peak_rss_mb": resource.getrusage(
-                resource.RUSAGE_SELF).ru_maxrss * 1024 / MB,
+            "lib_peak_rss_mb": self.peak_rss_mb,
         }
 
     def layer_metrics(self) -> dict:

@@ -1,12 +1,13 @@
 """Layered benchmark of the token codec engine.
 
-    python3 perfbench/run.py --workload long_docs --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload documents --seed 1 --seconds 10 --trace 0
 
 Every run executes three phases on inputs drawn from ``sources.synth``
 with ``--seed`` and checks every output:
 
 1. rowgroup_lib: PGS frames and engine parquet on fixed row groups, one
-   core, before Spark starts and after it stops (``lib_phase.py``);
+   core, in three blocks: before Spark starts, between the Spark phases
+   and after Spark stops (``lib_phase.py``);
 2. token_store: ``encode_table`` then ``decode_table`` at
    ``local[<cores>]`` (``spark_phases.StorePhase``);
 3. doc_lookup: pushed-down lookups through ``format("pgs")``
@@ -26,6 +27,7 @@ checkout (inputs, stores, Spark local dirs, temp files, traces).
 from __future__ import annotations
 
 import argparse
+import hashlib
 import importlib.util
 import json
 import os
@@ -38,10 +40,11 @@ WORK = os.path.join(ROOT, ".perfbench_work")
 # Share of --seconds each Spark phase measures for; each also has a
 # minimum sample count, which wins on a slow host.
 STORE_SHARE, LOOKUP_SHARE = 0.4, 0.6
-MIN_STORE_ITERS, MIN_LAYER_ITERS = 2, 2
+MIN_STORE_ITERS, MIN_LAYER_ITERS = 3, 2
 WARM_LOOKUPS = 1
-# library passes per block (two blocks per run)
-LIB_FRAME_PASSES, LIB_PQ_PASSES = 6, 3
+# library passes per block; each metric reports the best pass of the
+# run's three blocks, which sample three windows of the host's speed
+LIB_FRAME_PASSES, LIB_PQ_PASSES = 3, 1
 
 
 def _parse(argv):
@@ -104,9 +107,26 @@ def _stop_spark(spark) -> None:
         proc.wait(timeout=60)
 
 
+def _code_identity() -> str:
+    """Digest of the sources that decide the frame bytes: the package
+    and this benchmark."""
+    h = hashlib.sha256()
+    for top in ("parquet_go_spark", "perfbench"):
+        for d, dirs, files in sorted(os.walk(os.path.join(ROOT, top))):
+            dirs.sort()
+            for f in sorted(files):
+                if f.endswith((".py", ".c", ".h")):
+                    path = os.path.join(d, f)
+                    h.update(os.path.relpath(path, ROOT).encode())
+                    with open(path, "rb") as fh:
+                        h.update(fh.read())
+    return h.hexdigest()[:16]
+
+
 def _check_encoded_bytes(key: str, got: dict) -> int:
-    """Frame byte counts must repeat exactly across runs with the same
-    seed and sizes; returns the number of columns that drifted."""
+    """Frame byte counts must repeat exactly across runs of the same code
+    with the same seed, sizes and core count; returns the number of
+    columns that drifted."""
     path = os.path.join(WORK, "encoded_bytes.json")
     seen = {}
     if os.path.exists(path):
@@ -151,24 +171,25 @@ def run(args) -> dict:
     lap("lib_setup")
     lib.tr = tr
 
-    frames, pqs = (1, 1) if args.smoke else (LIB_FRAME_PASSES, LIB_PQ_PASSES)
+    frames = 1 if args.smoke else LIB_FRAME_PASSES
 
     def lib_block() -> None:
-        """Library passes sample two windows of host time with no Spark
-        process alive: before the session starts and after it ends."""
+        """Library passes, while no Spark job runs."""
         for i in range(frames):
             lib.frame_pass()
-            if i < pqs:
+            if i < LIB_PQ_PASSES:
                 lib.pq_pass()
 
     lib_block()
+    lib.note_peak_rss()  # before the Spark phases' inputs exist
     lap("lib_block")
     data = os.path.join(WORK, "input")
-    corpus = inputs.Corpus(args.seed, sizes["passage_tokens"])
-    store_info = inputs.write_input(corpus, os.path.join(data, "store"),
-                                    sizes["store_docs"])
-    lookup_info = inputs.write_input(corpus, os.path.join(data, "lookup"),
-                                     sizes["lookup_docs"])
+    corpus = inputs.Corpus(args.seed, sizes["shape"])
+    store_info = inputs.write_input(corpus.rows(sizes["store_rows"]),
+                                    os.path.join(data, "store"))
+    lookup_rows = corpus.rows(sizes["lookup_rows"])
+    lookup_info = inputs.write_input(lookup_rows,
+                                     os.path.join(data, "lookup"))
     lap("inputs")
     spark = _start_spark(cores)
     lap("session")
@@ -177,7 +198,7 @@ def run(args) -> dict:
                            store_info, WORK, sizes["store_target_tokens"])
         lap("store_input")
         lookup = LookupPhase(spark, untraced, os.path.join(data, "lookup"),
-                             lookup_info, WORK, sizes["lookup_target_tokens"],
+                             lookup_rows, WORK, sizes["lookup_target_tokens"],
                              corpus, args.seed)
         lap("lookup_store")
         # the lookup-store encode warmed the Python workers and their
@@ -197,6 +218,7 @@ def run(args) -> dict:
                 store.layer_iteration() if traced else store.iteration()
             done += 1
 
+        lib_block()
         if traced:
             lookup.map_parts()
         n_look = 4 if args.smoke else MIN_LOOKUPS
@@ -208,13 +230,12 @@ def run(args) -> dict:
         lap("measure")
     finally:
         _stop_spark(spark)
-    # the second library block, in the quiet after the JVM has exited
     lib_block()
     attempted = lib.attempted + store.attempted + lookup.attempted
     failed = lib.failed + store.failed + lookup.failed
     failed += _check_encoded_bytes(
-        f"{args.workload}/{args.seed}/{'smoke' if args.smoke else 'full'}",
-        lib.encoded_bytes)
+        f"{args.workload}/{args.seed}/{'smoke' if args.smoke else 'full'}"
+        f"/{cores}/{_code_identity()}", lib.encoded_bytes)
 
     if traced:
         layers.update(store.layer_metrics())
@@ -239,9 +260,11 @@ def run(args) -> dict:
     print(json.dumps({"detail": {
         "workload": args.workload, "seed": args.seed, "cores": cores,
         "codecs": lib.codecs, "encoded_bytes": lib.encoded_bytes,
-        "store_input": store_info, "lookup_input": lookup_info,
+        "store_input": dict(store_info, partitions=store.partitions),
+        "lookup_input": dict(lookup_info, partitions=lookup.partitions),
         "lib_raw_bytes": lib.raw, "lib_passes": [len(lib.enc), len(lib.pqw)],
-        "store_iterations": done, "lookups": len(latency), "steps_s": steps,
+        "store_samples": store.samples, "lookups": len(latency),
+        "steps_s": steps,
     }}))
     return {
         "correct": failed == 0, "attempted": attempted, "failed": failed,

@@ -17,10 +17,11 @@ metric:
   (``pqwriter`` / ``pqinterop``) on fixed row groups, one process, one
   core, no Spark.
 
-The workloads vary the input property the layers depend on: document
-length. Whole documents put the bytes in the ``tokens`` column (codec
-kernel, hand-off bytes); 16-token passages of the same documents put
-them in per-row overhead (row count, string columns, planning).
+The two workloads are the two row shapes the engine stores for the
+paper's job: whole documents (``sources.synth``: heavy-tailed lengths,
+12 sources) and the 512-token training windows that
+``operators.packing`` cuts from them (``pack_encode_roundtrip_query``:
+fixed lengths, one source, short numeric ids).
 """
 
 from __future__ import annotations
@@ -45,41 +46,36 @@ FORCED_CODECS = (
     ("plain", "tokens"),
 )
 
-# Input sizes per workload, in synthetic documents. ``passage_tokens``
-# splits every document into passages of at most that many tokens (None
-# keeps whole documents, median ~245 tokens).
+# Input sizes per workload, in rows of its shape (see ``inputs.py``).
+# The lookup store's target gives it 12 partitions, three task waves at
+# local[4]: a lookup scans them all today, and pruning on the doc_id
+# blooms should cut that to about one. More partitions would make each
+# lookup slower than a run's time allows.
+_SIZE = dict(store_rows=8000, store_target_tokens=150_000,
+             lookup_rows=3000, lookup_target_tokens=130_000,
+             group_rows=2048, groups=5)
 SIZES = {
-    "long_docs": dict(
-        passage_tokens=None,
-        store_docs=16_000, store_target_tokens=200_000,
-        lookup_docs=6000, lookup_target_tokens=800_000,
-        group_docs=2048, groups=5,
-    ),
-    "passages": dict(
-        passage_tokens=16,
-        store_docs=8000, store_target_tokens=160_000,
-        lookup_docs=2000, lookup_target_tokens=260_000,
-        group_docs=256, groups=5,
-    ),
+    "documents": dict(_SIZE, shape="documents"),
+    "packed": dict(_SIZE, shape="packed"),
 }
 
 # --smoke: every phase once at a tiny size, to check names and units.
 SMOKE_SIZES = {
-    name: dict(sz, store_docs=600, store_target_tokens=100_000,
-               lookup_docs=300, lookup_target_tokens=100_000,
-               group_docs=128, groups=2)
+    name: dict(sz, store_rows=600, store_target_tokens=100_000,
+               lookup_rows=300, lookup_target_tokens=100_000,
+               group_rows=128, groups=2)
     for name, sz in SIZES.items()
 }
 
 WORKLOADS = [
-    {"name": "long_docs",
-     "why": "whole documents (~500 tokens): bytes sit in tokens, so kernel "
-            "and hand-off dominate; store 16k rows 8M tokens 40 parts, "
-            "lookup store 6k rows 4 parts, lib 5 groups x 2048 rows"},
-    {"name": "passages",
-     "why": "same documents cut into 16-token passages: per-row cost and "
-            "doc_id strings dominate; store 250k rows 4M tokens 25 parts, "
-            "lookup store 63k rows 4 parts, lib 5 x ~8k rows"},
+    {"name": "documents",
+     "why": "sources.synth documents (heavy-tailed lengths, 12 sources); "
+            "store 8k rows ~4M tokens ~27 parts, lookup store 3k rows 12 "
+            "parts, lib 5 groups x 2048 rows"},
+    {"name": "packed",
+     "why": "the 512-token windows operators/packing.py hands to "
+            "encode_table (fixed lengths, one source); store 8k rows 4.1M "
+            "tokens 28 parts, lookup store 3k rows 12 parts, lib 5 x 2048"},
 ]
 
 
