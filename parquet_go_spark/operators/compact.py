@@ -223,8 +223,6 @@ def compact_store(
     # partitions must not silently lose their blooms, page index, or geo
     # stats (they are recomputed over the merged chunk)
     src_meta = src.meta()
-    if bloom_cols is None and src_meta.get("bloom_cols"):
-        bloom_cols = set(src_meta["bloom_cols"])
     if page_rows is None and src_meta.get("page_rows"):
         page_rows = src_meta["page_rows"]
     geo_cols = set(src_meta["geo_cols"]) if src_meta.get("geo_cols") else None
@@ -236,8 +234,8 @@ def compact_store(
     # of a crashed job, and a stream store a torn last batch — both are
     # invisible to readers and must stay invisible to compaction
     from ..sources.pgs_datasource import (
-        PGSStreamWriter, _committed_files, _delete_files,
-        _require_no_branches,
+        PGSStreamWriter, _bloomed_cols, _committed_files, _dataset,
+        _delete_files, _require_no_branches,
     )
 
     # compaction rebases part ids; open branches hold files addressed in
@@ -246,6 +244,9 @@ def compact_store(
     files = _committed_files(src_dir)
     if not files:
         raise ValueError(f"source store has no committed blobs: {src_dir}")
+    if bloom_cols is None:
+        # the blooms the source's chunks carry, recorded in its meta or not
+        bloom_cols = set(_bloomed_cols(_dataset(src_dir), src_meta))
     src_blobs = spark.read.schema(BLOB_SCHEMA).parquet(*files)
     if src_meta.get("clustering") == "stream_append":
         cap = (
@@ -348,6 +349,9 @@ def compact_store(
 
     meta = dict(src_meta)
     meta["num_parts"] = len(groups)
+    # the layout this job actually built, which an explicit argument
+    # may have changed from the source's
+    meta["bloom_cols"] = sorted(bloom_cols) if bloom_cols else []
     meta["compacted_from"] = src_dir
     if meta.get("clustering") == "stream_append":
         # part ids were rebased to 0..N: the batch namespace (and with it

@@ -278,7 +278,10 @@ def encode_table(
 
     ``codec_map`` / ``bloom_cols`` are the per-column knob surface — the
     analog of the reference's struct-tag encoding/bloomfilter options
-    (common/tag.go:12-29, SURVEY §1.3).
+    (common/tag.go:12-29, SURVEY §1.3). ``bloom_cols`` is recorded in the
+    store meta, so compaction and upserts keep building the blooms; a
+    ``format("pgs")`` pushdown read prunes ``=`` / ``IN`` lookups on any
+    column whose chunks carry blooms, whichever writer built them.
     """
     keysmod.validate_column_keys(column_keys, df.columns)
     store = ManifestStore(out_dir)
@@ -313,6 +316,7 @@ def encode_table(
         key_col=None, clustering="token_weighted",
         num_parts=plan.num_partitions, page_rows=page_rows,
         sort_cols=sort_cols or [],
+        bloom_cols=sorted(bloom_cols) if bloom_cols else [],
         # makes the store self-describing for format("pgs") reads
         schema_json=df.schema.jsonValue(),
         encrypted=encryption_key is not None or bool(column_keys),

@@ -249,7 +249,9 @@ def encode_partitioned(
         encode_blobs_df(routed, encode_kw.pop("compression", "zstd"),
                         "auto", **encode_kw)
     )
+    bloom_cols = encode_kw.get("bloom_cols")
     store.write_meta(
+        bloom_cols=sorted(bloom_cols) if bloom_cols else [],
         partition_spec=[
             {"kind": t.kind, "col": t.col, "arg": t.arg, "src": t.src}
             for t in ts

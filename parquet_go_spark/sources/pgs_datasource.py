@@ -997,43 +997,42 @@ def _stats_keep(vmin: str, vmax: str, f: Filter) -> bool:
     return True
 
 
-def _bloom_hits(d, aliases: list[str], values: list) -> set[int] | None:
-    """part_ids whose split-block bloom may contain any of ``values``;
-    None when the column has no blooms (cannot prune). ``aliases`` are
-    the column's current + historical names (schema evolution): each
-    partition stores the chunk (and its bloom) under exactly one."""
+def _bloom_misses(d, aliases: list[str], values: list,
+                  part_ids: set[int]) -> set[int]:
+    """part_ids (of ``part_ids``) whose chunk carries a split-block bloom
+    that rules out every one of ``values`` — the only partitions a point
+    filter may drop. One-sided: a chunk without a bloom, a partition with
+    no chunk under any of ``aliases`` (the column's current + historical
+    names, disjoint per partition) and a value the blooms cannot hash
+    all keep their partition."""
     import numpy as np
     import pyarrow.dataset as pads
 
     from .. import bloom as bloommod
 
     vs = [v for v in values if v is not None]
-    if not vs:
-        return None
-    if isinstance(vs[0], (int,)) and not isinstance(vs[0], bool):
+    if not vs or not part_ids:
+        return set()
+    if all(isinstance(v, int) and not isinstance(v, bool) for v in vs):
         hashes = bloommod.xxhash64_u64(np.asarray(vs, dtype=np.int64))
-    elif isinstance(vs[0], (str, bytes)):
+    elif all(isinstance(v, (str, bytes)) for v in vs):
         hashes = bloommod.xxhash64_bytes(
             [v.encode() if isinstance(v, str) else v for v in vs]
         )
     else:
-        return None
+        return set()
     t = d.to_table(
         columns=["part_id", "bloom"],
-        filter=pads.field("col").isin(aliases),
+        filter=pads.field("col").isin(aliases)
+        & pads.field("part_id").isin(sorted(part_ids))
+        & pads.field("bloom").is_valid(),
     )
-    hits: set[int] = set()
-    saw_bloom = False
-    for pid, blm in zip(t.column("part_id").to_pylist(),
-                        t.column("bloom").to_pylist()):
-        if blm is None:
-            hits.add(pid)  # no filter on this chunk -> cannot prune it
-            continue
-        saw_bloom = True
-        bf = bloommod.SplitBlockBloom.frombytes(blm)
-        if bool(bf.check_hashes(hashes).any()):
-            hits.add(pid)
-    return hits if saw_bloom else None
+    return {
+        pid for pid, blm in zip(t.column("part_id").to_pylist(),
+                                t.column("bloom").to_pylist())
+        if not bloommod.SplitBlockBloom.frombytes(blm)
+        .check_hashes(hashes).any()
+    }
 
 
 def _candidate_parts(
@@ -1042,6 +1041,9 @@ def _candidate_parts(
     """Driver-side partition pruning from manifest stats + blooms. Reads
     only metadata columns of the blob files (parquet column pruning keeps
     blob bytes untouched) — the footer read, bounded by parts x cols.
+    Point filters (``=``, ``IN``, non-null ``<=>``) probe whatever blooms
+    the column's chunks carry, whichever writer built them: the chunks,
+    not the store meta, say where a bloom exists.
     ``d``/``meta`` let the caller open the dataset and store meta once
     for the whole planning pass (and select the view — a branch read's
     ``d`` already holds the branch's file set)."""
@@ -1064,7 +1066,6 @@ def _candidate_parts(
         by_col.setdefault(col, {})[pid] = (vmin, vmax, cnt, nulls)
     keep = parts
     meta = _meta(path) if meta is None else meta
-    bloom_cols = set(meta.get("bloom_cols") or [])
     renames = meta.get("column_renames") or {}
     added = meta.get("added_columns") or {}
     for f in filters:
@@ -1138,15 +1139,13 @@ def _candidate_parts(
             p for p in keep
             if p not in rows or _stats_keep(rows[p][0], rows[p][1], f)
         }
-        if col in bloom_cols and col not in added and (
+        if col not in added and (
             isinstance(f, (EqualTo, In))
             or (isinstance(f, EqualNullSafe) and f.value is not None)
         ):
             vals = (list(f.value) if isinstance(f, In)
                     else [f.value])
-            hits = _bloom_hits(d, aliases, vals)
-            if hits is not None:
-                keep = keep & hits
+            keep = keep - _bloom_misses(d, aliases, vals, keep)
     return sorted(keep)
 
 
@@ -1362,6 +1361,30 @@ def _stream_cap(meta: dict) -> int | None:
         * PGSStreamWriter.STRIDE
 
 
+def _bloomed_cols(d, meta: dict) -> list[str]:
+    """Current names of the columns whose committed chunks carry a bloom
+    — the columns ``_candidate_parts`` prunes point filters on. A renamed
+    column's stored aliases map to its current name; added and dropped
+    columns never bloom-prune, so they are left out."""
+    import pyarrow.dataset as pads
+
+    t = d.to_table(columns=["part_id", "col"],
+                   filter=pads.field("bloom").is_valid())
+    current = {a: c for c, olds in (meta.get("column_renames") or {}).items()
+               for a in olds}
+    cap = _stream_cap(meta)
+    names = {
+        current.get(c, c)
+        for pid, c in zip(t.column("part_id").to_pylist(),
+                          t.column("col").to_pylist())
+        if cap is None or pid < cap
+    }
+    names -= set(meta.get("added_columns") or {})
+    if meta.get("schema_json"):
+        names &= set(StructType.fromJson(meta["schema_json"]).fieldNames())
+    return sorted(names)
+
+
 def describe_store(path: str) -> dict:
     """Operational summary of a store from metadata only (manifest
     columns + store meta; blob bytes never read — the footer-scale
@@ -1374,7 +1397,9 @@ def describe_store(path: str) -> dict:
         "key_col": meta.get("key_col"),
         "page_rows": meta.get("page_rows"),
         "encrypted": bool(meta.get("encrypted")),
-        "bloom_cols": meta.get("bloom_cols") or [],
+        # filled from the chunks below: a bloom prunes wherever a chunk
+        # carries one, whether or not the writer recorded the column
+        "bloom_cols": [],
         "ndv_cols": meta.get("ndv_cols") or [],
         "columns": [],
         "parts": 0, "rows": 0, "live_rows": 0,
@@ -1402,7 +1427,9 @@ def describe_store(path: str) -> dict:
                           for f in sch.fields]
     if not _has_blobs(path):
         return out
-    t = _dataset(path).to_table(
+    d = _dataset(path)
+    out["bloom_cols"] = _bloomed_cols(d, meta)
+    t = d.to_table(
         columns=["part_id", "col", "codec", "count",
                  "raw_size", "encoded_size"]
     )
