@@ -387,7 +387,6 @@ def compact_store(
     meta.pop("retired_columns", None)
     meta["lineage"] = {str(i): g for i, g in enumerate(groups) if len(g) > 1}
     dst.write_meta(**meta)
-    dst.write_manifest_snapshot(spark)
     return {
         "src_parts": len(sizes),
         "dst_parts": len(groups),

@@ -5,10 +5,11 @@ Analog of the reference write path (SURVEY.md §3.1,
 the applyInArrow kernel is steps 3.1.4-3.1.5 (encode to pages, emit chunk
 metadata); the parquet/Iceberg commit is the footer write.
 
-Plan shape at scale: the only shuffle is the single hash repartition on
-part_id (groupBy -> applyInArrow); everything upstream is a narrow scan and
-everything downstream is a file write. Skew is handled by the partition
-planner, not by oversized tasks.
+Plan shape at scale: the only shuffle is one hash repartition on part_id
+into min(planned groups, cores) partitions, which groupBy -> applyInArrow
+reuses and AQE leaves alone, so the encode stage runs one task per core;
+everything upstream is a narrow scan and everything downstream is a file
+write. Skew is handled by the partition planner, not by oversized tasks.
 """
 
 from __future__ import annotations
@@ -233,8 +234,14 @@ def encode_blobs_df(
     aad_prefix: bytes = b"",
     ndv_cols: set[str] | None = None,
 ) -> DataFrame:
-    """planned (with part_id) -> blob rows DataFrame (lazy)."""
-    grouped = planned.groupBy("part_id")
+    """planned (with part_id) -> blob rows DataFrame (lazy).
+
+    ``num_partitions`` is the number of groups the caller planned; the
+    shuffle gets min(num_partitions, cores) partitions (module doc)."""
+    cores = planned.sparkSession.sparkContext.defaultParallelism
+    grouped = planned.repartition(
+        min(num_partitions or cores, cores), "part_id"
+    ).groupBy("part_id")
     return grouped.applyInArrow(
         make_encode_fn(compression, codec, codec_map, bloom_cols, page_rows,
                        sort_key, encryption_key, column_keys, geo_cols,
@@ -287,31 +294,22 @@ def encode_table(
     store = ManifestStore(out_dir)
     planned, plan = plan_partitions(df, target_tokens=target_tokens)
     pending = store.pending(spark, planned) if resume and store.exists() else planned
-    if waves <= 1:
-        store.append_blobs(
-            encode_blobs_df(pending, compression, codec, codec_map=codec_map,
-                            bloom_cols=bloom_cols, page_rows=page_rows,
-                            encryption_key=encryption_key,
-                            column_keys=column_keys, aad_prefix=aad_prefix,
-                            ndv_cols=ndv_cols)
+    # each wave encodes part ids [lo, lo + per); one wave needs no filter
+    per = math.ceil(plan.num_partitions / max(waves, 1))
+    for lo in range(0, plan.num_partitions, per):
+        hi = min(lo + per, plan.num_partitions)
+        wave_df = pending if waves <= 1 else pending.filter(
+            (F.col("part_id") >= lo) & (F.col("part_id") < hi)
         )
-    else:
-        per = math.ceil(plan.num_partitions / waves)
-        for w in range(waves):
-            lo, hi = w * per, min((w + 1) * per, plan.num_partitions)
-            if lo >= hi:
-                break
-            wave_df = pending.filter(
-                (F.col("part_id") >= lo) & (F.col("part_id") < hi)
-            )
-            store.append_blobs(
-                encode_blobs_df(wave_df, compression, codec,
-                                codec_map=codec_map, bloom_cols=bloom_cols,
-                                page_rows=page_rows,
-                                encryption_key=encryption_key,
-                                column_keys=column_keys,
-                                aad_prefix=aad_prefix, ndv_cols=ndv_cols)
-            )
+        store.append_blobs(
+            encode_blobs_df(wave_df, compression, codec,
+                            num_partitions=hi - lo,
+                            codec_map=codec_map, bloom_cols=bloom_cols,
+                            page_rows=page_rows,
+                            encryption_key=encryption_key,
+                            column_keys=column_keys,
+                            aad_prefix=aad_prefix, ndv_cols=ndv_cols)
+        )
     store.write_meta(
         key_col=None, clustering="token_weighted",
         num_parts=plan.num_partitions, page_rows=page_rows,
@@ -328,5 +326,4 @@ def encode_table(
         column_key_cols=sorted(column_keys) if column_keys else [],
         ndv_cols=sorted(ndv_cols) if ndv_cols else [],
     )
-    store.write_manifest_snapshot(spark)
     return store, plan

@@ -117,7 +117,6 @@ def rotate_store_keys(
     meta["encrypted"] = nk is not None or bool(nc)
     meta["column_key_cols"] = sorted(nc)
     dst.write_meta(**meta)
-    dst.write_manifest_snapshot(spark)
     return dst
 
 
@@ -220,9 +219,10 @@ def fsck_store(
         name = d.get("name") if isinstance(d, dict) else None
         if name and not os.path.isdir(os.path.join(path, "deletes", name)):
             extra.append((-1, "_meta", "missing_delete_dir", name))
-    # the materialized manifest/ snapshot is a convenience copy for
-    # external readers; the live blob projection is truth — flag drift
-    mdir = os.path.join(path, "manifest")
+    # a manifest/ snapshot is an on-demand export for external readers
+    # that no writer refreshes; the live blob projection is truth — flag
+    # an export that has drifted from it
+    mdir = store.manifest_dir
     if os.path.isdir(mdir) and any(
         f.endswith(".parquet") for f in os.listdir(mdir)
     ):

@@ -247,11 +247,14 @@ def encode_partitioned(
     store = ManifestStore(out_dir)
     store.append_blobs(
         encode_blobs_df(routed, encode_kw.pop("compression", "zstd"),
-                        "auto", **encode_kw)
+                        "auto", num_partitions=len(tuples), **encode_kw)
     )
     bloom_cols = encode_kw.get("bloom_cols")
+    ndv_cols = encode_kw.get("ndv_cols")
     store.write_meta(
         bloom_cols=sorted(bloom_cols) if bloom_cols else [],
+        page_rows=encode_kw.get("page_rows"),
+        ndv_cols=sorted(ndv_cols) if ndv_cols else [],
         partition_spec=[
             {"kind": t.kind, "col": t.col, "arg": t.arg, "src": t.src}
             for t in ts

@@ -154,7 +154,8 @@ def encode_generic(
     store = ManifestStore(out_dir)
     store.append_blobs(
         encode_blobs_df(
-            planned, compression, "auto", codec_map=codec_map,
+            planned, compression, "auto", num_partitions=num_parts,
+            codec_map=codec_map,
             bloom_cols=bloom_cols, page_rows=page_rows,
             # sorted pages within a partition: tight non-overlapping page
             # bounds + boundary_order=ASC -> intra-chunk page pruning

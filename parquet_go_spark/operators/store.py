@@ -6,6 +6,8 @@ The reference's footer/ColumnIndex/OffsetIndex (SURVEY.md §2.4,
 blobs parquet directory is the committed source of truth (Spark's file
 committer gives atomic job commit); the manifest is a column-pruned
 projection of it, so "completed partitions" never disagrees with the data.
+Readers use that live view; ``write_manifest_snapshot`` is an on-demand
+export no writer calls, and fsck flags an export that has gone stale.
 
 Iceberg note: the sandbox has no Iceberg runtime jar, so the store uses
 parquet directories with Spark's atomic job commit as the documented
@@ -68,7 +70,8 @@ class ManifestStore:
         )
 
     def write_manifest_snapshot(self, spark: SparkSession) -> None:
-        """Materialize the manifest projection for external readers."""
+        """Export the manifest to ``manifest/`` for external readers, on
+        demand only: no writer refreshes it (fsck flags a stale one)."""
         self.manifest(spark).write.mode("overwrite").parquet(self.manifest_dir)
 
     def pending(self, spark: SparkSession, planned: DataFrame) -> DataFrame:

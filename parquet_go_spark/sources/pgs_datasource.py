@@ -1159,7 +1159,9 @@ def _page_keep_map(
     row-aligned across columns, so one keep list serves every projected
     column. Parts whose keep list is complete are omitted (no overhead);
     pruning is advisory-lossless — page bounds are true bounds and Spark
-    re-applies the exact filter."""
+    re-applies the exact filter. The ``pages`` column of the candidate
+    chunks, not the store meta, says where a page split exists: an
+    unpaged chunk carries one page and is decoded whole."""
     import pyarrow.dataset as pads
 
     usable = [
@@ -1171,7 +1173,7 @@ def _page_keep_map(
     ]
     if meta is None:
         meta = _meta(path)
-    if not usable or not meta.get("page_rows") or not part_ids:
+    if not usable or not part_ids:
         return {}
     if d is None:
         d = _dataset(path)
@@ -1242,7 +1244,7 @@ def _page_keep_map(
                                        f)
                     }
                     keep = mine if keep is None else keep & mine
-        if keep is not None and npages and len(keep) < npages:
+        if keep is not None and npages > 1 and len(keep) < npages:
             out[pid] = tuple(sorted(keep))
     return out
 
@@ -1253,7 +1255,8 @@ def _part_file_map(
     """part_id -> blob files that can contain it, from each file's
     row-group statistics (one driver-side footer pass, already paid by
     the stats read). Files without part_id stats count for every part —
-    never a false negative."""
+    never a false negative; a file without rows counts for none (Spark
+    writes one when the write's first task gets no group)."""
     if not part_ids:
         return {}
     if d is None:
@@ -1263,6 +1266,8 @@ def _part_file_map(
         lo = hi = None
         try:
             md = frag.metadata
+            if md.num_rows == 0:
+                continue
             col_idx = next(
                 (j for j in range(md.row_group(0).num_columns)
                  if md.row_group(0).column(j).path_in_schema == "part_id"),

@@ -31,7 +31,6 @@ streaming dedup needs. No driver-side state anywhere.
 
 from __future__ import annotations
 
-import os
 from typing import Any, Iterable, Iterator, Tuple
 
 import pandas as pd
@@ -39,9 +38,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..operators.encode_job import encode_blobs_df
 from ..operators.store import ManifestStore
-from ..sources.synth import SCHEMA
+from .ingest import drain_into_store, read_drop_dir
 
 def content_key() -> F.Column:
     """xxhash64 over the token array + length: JVM-side, array-aware.
@@ -117,38 +115,5 @@ def dedup_encode_stream(
     before they reach the encoder. Same exactly-once contract as
     `ingest.stream_encode`: checkpointed batch ids + manifest anti-join;
     the dedup state itself rides the same streaming checkpoint."""
-    store = ManifestStore(out_dir)
-    stream = (
-        spark.readStream.schema(SCHEMA)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(in_dir)
-    )
-    deduped = dedup_stream(stream)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        agg = batch_df.select(F.sum("n_tok").alias("t")).collect()[0]
-        total = int(agg["t"] or 0)
-        if total == 0:
-            return
-        nparts = max(-(-total // target_tokens), 1)
-        base = batch_id * 1_000_000
-        planned = batch_df.withColumn(
-            "part_id",
-            (F.lit(base)
-             + F.pmod(F.xxhash64("doc_id"), F.lit(nparts))).cast("int"),
-        )
-        pending = (
-            store.pending(batch_df.sparkSession, planned)
-            if store.exists() else planned
-        )
-        store.append_blobs(encode_blobs_df(pending, compression, "auto"))
-
-    q = (
-        deduped.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_sec)
-    store.write_manifest_snapshot(spark)
-    return store
+    return drain_into_store(dedup_stream(read_drop_dir(spark, in_dir)),
+                            out_dir, target_tokens, compression, timeout_sec)

@@ -34,17 +34,34 @@ def stream_encode(
     timeout_sec: int = 300,
 ) -> ManifestStore:
     """Drain ``in_dir`` (parquet files of token sequences) into the blob
-    store with one availableNow streaming query.
+    store with one availableNow streaming query."""
+    return drain_into_store(read_drop_dir(spark, in_dir), out_dir,
+                            target_tokens, compression, timeout_sec)
+
+
+def read_drop_dir(spark: SparkSession, in_dir: str) -> DataFrame:
+    """The parquet drop directory as a stream, four files per trigger."""
+    return (
+        spark.readStream.schema(SCHEMA)
+        .option("maxFilesPerTrigger", 4)
+        .parquet(in_dir)
+    )
+
+
+def drain_into_store(
+    stream: DataFrame,
+    out_dir: str,
+    target_tokens: int,
+    compression: str | None,
+    timeout_sec: int,
+) -> ManifestStore:
+    """Encode every micro-batch of ``stream`` into the blob store at
+    ``out_dir`` and return once the availableNow query drains.
 
     Partition ids are assigned per micro-batch from a hash of doc_id offset
     by a per-batch base, so ids stay stable under replay (batch_id is the
     streaming checkpoint's replay key)."""
     store = ManifestStore(out_dir)
-    stream = (
-        spark.readStream.schema(SCHEMA)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(in_dir)
-    )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         # micro-batches are modest; bucket count from a cheap count agg
@@ -63,7 +80,8 @@ def stream_encode(
             store.pending(batch_df.sparkSession, planned)
             if store.exists() else planned
         )
-        store.append_blobs(encode_blobs_df(pending, compression, "auto"))
+        store.append_blobs(encode_blobs_df(pending, compression, "auto",
+                                           num_partitions=nparts))
 
     q = (
         stream.writeStream.foreachBatch(sink)
@@ -72,5 +90,4 @@ def stream_encode(
         .start()
     )
     q.awaitTermination(timeout_sec)
-    store.write_manifest_snapshot(spark)
     return store

@@ -1,11 +1,12 @@
-"""Point-lookup pruning on the blooms the chunks carry.
+"""Pushed-down pruning on the blooms and page indexes the chunks carry.
 
 A pushed-down ``=`` / ``IN`` / non-null ``<=>`` filter drops a partition
 only when the chunk of that column carries a split-block bloom that rules
 out every value. The store meta's ``bloom_cols`` is a record of the
 writer's layout policy (compaction and upserts inherit it), never a gate
 on the read side — so a store written before the writers recorded it
-prunes the same way.
+prunes the same way. Page pruning likewise reads the ``pages`` column of
+the candidate chunks, not the meta's ``page_rows``.
 """
 
 from __future__ import annotations
@@ -22,6 +23,7 @@ from parquet_go_spark import chunk
 from parquet_go_spark.operators.compact import compact_store
 from parquet_go_spark.operators.encode_job import encode_table
 from parquet_go_spark.operators.partspec import encode_partitioned
+from parquet_go_spark.operators.pruned import encode_generic
 from parquet_go_spark.sources.pgs_datasource import (
     EqualNullSafe,
     EqualTo,
@@ -31,6 +33,7 @@ from parquet_go_spark.sources.pgs_datasource import (
     _candidate_parts,
     _committed_files,
     _meta,
+    _page_keep_map,
     _write_meta,
     describe_store,
     register,
@@ -191,6 +194,62 @@ def test_encode_partitioned_records_bloom_cols(spark, tmp_path):
                                "k long, g string")
     out = str(tmp_path / "parted")
     store = encode_partitioned(spark, df, out, "identity(g)",
-                               bloom_cols={"k"})
+                               bloom_cols={"k"}, page_rows=4,
+                               ndv_cols={"k"})
     assert store.meta()["bloom_cols"] == ["k"]
-    assert describe_store(out)["bloom_cols"] == ["k"]
+    desc = describe_store(out)
+    assert desc["bloom_cols"] == ["k"]
+    assert desc["page_rows"] == 4
+    assert desc["ndv_cols"] == ["k"]
+
+
+@pytest.mark.parametrize("seed", [3, 19])
+def test_page_pruning_differential(spark, tmp_path, seed):
+    register(spark)
+    rng = np.random.default_rng(seed)
+    n = 3000
+    df = spark.createDataFrame(
+        [(int(k), int(v)) for k, v in
+         zip(rng.permutation(n), rng.integers(0, 500, n))],
+        "k long, v long")
+    paged = str(tmp_path / "paged")
+    encode_generic(spark, df, paged, key_col="k", num_parts=4,
+                   page_rows=int(rng.integers(32, 200)), sort_within=True)
+    # the same chunks under a meta that never recorded page_rows
+    old = str(tmp_path / "pre_record")
+    shutil.copytree(paged, old)
+    meta = _meta(old)
+    meta.pop("page_rows")
+    _write_meta(old, meta)
+    unpaged = str(tmp_path / "unpaged")
+    encode_generic(spark, df, unpaged, key_col="k", num_parts=4,
+                   sort_within=True)
+
+    pushed = spark.read.format("pgs").option("pushdown", "true")
+    plain = spark.read.format("pgs")
+    pruned_any = False
+    for trial in range(8):
+        lo = int(rng.integers(0, n))
+        hi = lo + int(rng.integers(0, 300))
+        keys = tuple(int(x) for x in rng.integers(0, n, 3))
+        filters, cond = [
+            ([GreaterThanOrEqual(("k",), lo), LessThanOrEqual(("k",), hi)],
+             (F.col("k") >= lo) & (F.col("k") <= hi)),
+            ([EqualTo(("k",), lo)], F.col("k") == lo),
+            ([In(("k",), keys)], F.col("k").isin(list(keys))),
+            ([GreaterThanOrEqual(("k",), lo), LessThanOrEqual(("v",), 40)],
+             (F.col("k") >= lo) & (F.col("v") <= 40)),
+        ][trial % 4]
+        cands = _candidate_parts(paged, filters)
+        keep = _page_keep_map(paged, cands, filters)
+        assert _page_keep_map(old, cands, filters) == keep
+        assert _page_keep_map(
+            unpaged, _candidate_parts(unpaged, filters), filters) == {}
+        pruned_any |= bool(keep)
+        want = sorted(tuple(r) for r in df.filter(cond).collect())
+        for path in (paged, old, unpaged):
+            assert sorted(tuple(r) for r in
+                          plain.load(path).filter(cond).collect()) == want
+            assert sorted(tuple(r) for r in
+                          pushed.load(path).filter(cond).collect()) == want
+    assert pruned_any

@@ -52,6 +52,8 @@ def test_dedup_encode_stream_drops_duplicates(spark, tmp_path):
         F.sum("count").alias("n")
     ).collect()[0]["n"]
     assert total == 400
+    # the live projection is the manifest: no snapshot is materialised
+    assert not os.path.exists(store.manifest_dir)
 
 
 def test_dedup_stream_watermarked_plan(spark, tmp_path):
