@@ -448,9 +448,15 @@ def _rg_bloom_keep(path: str, meta: dict, gi: int, col: str,
                 b = v.encode()
             elif isinstance(v, bytes):
                 b = v
-            elif isinstance(v, (int,)):
-                b = int(v).to_bytes(4 if cc.physical_type == P.T_INT32
-                                    else 8, "little", signed=True)
+            elif isinstance(v, int) and cc.physical_type in (P.T_INT32,
+                                                              P.T_INT64):
+                try:
+                    b = int(v).to_bytes(
+                        4 if cc.physical_type == P.T_INT32 else 8,
+                        "little",
+                        signed=not P._leaf_unsigned(cc.leaf_el))
+                except OverflowError:
+                    return False    # outside the physical type's range
             else:
                 return True
             from .. import bloom as bloommod
@@ -726,7 +732,7 @@ def _explode_embeddings(df: DataFrame) -> DataFrame:
 def reader_embeddings_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LIST columns through the engine's spec reader: the real
     embeddings.parquet (3-level list<float>) decoded by the engine's
-    Dremel reassembly (pqinterop._assemble_list_array), exploded for
+    Dremel record assembly (pqinterop._assemble), exploded for
     cross-engine value comparison (float arrays don't canon reliably
     as cells — same rule as rt_embeddings)."""
     df = read_parquet_dir(

@@ -328,11 +328,11 @@ class LeafInfo:
 
 
 def _walk_schema(meta: dict) -> list[LeafInfo]:
-    """Depth-first SchemaElement walk -> per-leaf Dremel level info.
-
-    Scope: flat leaves and single-level LIST over a primitive (the
-    3-level optional/repeated/element encoding every modern writer
-    emits — reference schema walk: internal/schema/schema.go)."""
+    """Depth-first SchemaElement walk -> per-leaf Dremel level info
+    (max def/rep, top-level column; reference schema walk:
+    internal/schema/schema.go). Nested columns are assembled from the
+    per-node levels of _walk_tree; d_list/d_slot here serve the row-wise
+    decode_column lane for a single-level LIST over a primitive."""
     elems = meta[2]
     out: list[LeafInfo] = []
     pos = 1
@@ -368,7 +368,7 @@ def _walk_schema(meta: dict) -> list[LeafInfo]:
             li.d_slot = li.max_def - leaf_opt
             li.d_list = li.d_slot - 1
         # max_rep > 1 (nested repetition): thresholds are per-node and
-        # derived by _walk_tree for the general reassembly path
+        # derived by _walk_tree for _assemble
     return out
 
 
@@ -407,9 +407,12 @@ def column_chunks(meta: dict, ctx=None,
                 if ccrypt is None:
                     enc_key = None          # plaintext column
                 elif 2 in ccrypt:           # ENCRYPTION_WITH_COLUMN_KEY
+                    # by dotted leaf path, then by top-level column
                     cpath = b".".join(ccrypt[2].get(1, [])).decode()
-                    enc_key = dec.resolve(ccrypt[2].get(2),
-                                          cpath.split(".")[0] or cpath)
+                    enc_key = dec.resolve(
+                        ccrypt[2].get(2),
+                        cpath if cpath in dec.column_keys
+                        else cpath.split(".")[0] or cpath)
                 else:                       # ENCRYPTION_WITH_FOOTER_KEY
                     enc_key = fkey
                 if enc_key is not None and 3 not in cc and 9 in cc:
@@ -1400,8 +1403,6 @@ def decode_table(path: str, columns: list[str] | None = None,
     concurrent readers in one process never share a policy."""
     import pyarrow as pa
 
-    from . import int96 as i96mod
-
     if crc_mode not in (None, "auto", "strict", "ignore"):
         raise ValueError(f"unknown crc_mode {crc_mode!r}")
     meta, ctx = read_footer_ex(path, decryption)
@@ -1412,94 +1413,16 @@ def decode_table(path: str, columns: list[str] | None = None,
     sel = range(len(groups)) if row_groups is None else row_groups
     row_ranges = row_ranges or {}
 
-    def _mask_rows(rows: list, gi: int) -> list:
-        r = row_ranges.get(gi)
-        if r is None:
-            return rows
-        return [rows[i] for lo, hi in r for i in range(lo, hi)]
-
     arrays = []
     for f in schema:
-        if pa.types.is_nested(f.type) and _nested_in_nested(f.type):
-            chunks = []
-            tree = None
-            for gi in sel:
-                if tree is None:
-                    tree = _top_tree(meta, f.name)
-                arr = None
-                if tree["kind"] == "list" and pa.types.is_list(f.type):
-                    vt = f.type.value_type
-                    if pa.types.is_struct(vt):
-                        arr = _assemble_list_struct(
-                            path, groups[gi], f, tree)
-                    elif pa.types.is_list(vt) and \
-                            not pa.types.is_nested(vt.value_type):
-                        arr = _assemble_list_list(
-                            path, groups[gi], f, tree)
-                    if arr is not None:
-                        arr = arr.cast(f.type)
-                if arr is None:
-                    arr = _assemble_general(path, groups[gi], f, tree)
-                r = row_ranges.get(gi)
-                if r is not None:
-                    arr = arr.take(pa.array(
-                        [i for lo, hi in r for i in range(lo, hi)],
-                        pa.int64()))
-                chunks.append(arr)
-            arrays.append(pa.concat_arrays(chunks).cast(f.type))
-            continue
-        if pa.types.is_map(f.type):
-            chunks = []
-            # leaf paths from the schema tree, not assumed names —
-            # legacy MAP_KEY_VALUE groups use e.g. "m.map.key"
-            mtree = _top_tree(meta, f.name)
-            kpath, vpath = mtree["key"]["path"], mtree["value"]["path"]
-            for gi in sel:
-                kcc = next((c for c in groups[gi] if c.name == kpath),
-                           None)
-                vcc = next((c for c in groups[gi] if c.name == vpath),
-                           None)
-                if kcc is None or vcc is None:
-                    raise ValueError(
-                        f"map column {f.name!r}: leaves {kpath!r}/"
-                        f"{vpath!r} not found in row group {gi}")
-                arr = _assemble_map_array(path, kcc, vcc, f.type)
-                r = row_ranges.get(gi)
-                if r is not None:
-                    arr = arr.take(pa.array(
-                        [i for lo, hi in r for i in range(lo, hi)],
-                        pa.int64()))
-                chunks.append(arr)
-            arrays.append(pa.concat_arrays(chunks).cast(f.type))
-            continue
-        if pa.types.is_list(f.type):
+        if pa.types.is_nested(f.type):
+            tree = _top_tree(meta, f.name)
             chunks = []
             for gi in sel:
-                cc = next(c for c in groups[gi] if c.top_name == f.name)
-                buf, rcc = chunk_reader(path, cc)
-                arr = _assemble_list_array(buf, rcc, f.type.value_type)
+                arr = _assemble(path, groups[gi], f.type, tree)
                 r = row_ranges.get(gi)
-                if r is not None:
-                    arr = arr.take(pa.array(
-                        [i for lo, hi in r for i in range(lo, hi)],
-                        pa.int64()))
-                chunks.append(arr)
-            arrays.append(pa.concat_arrays(chunks).cast(f.type))
-            continue
-        if pa.types.is_struct(f.type):
-            arr, _ = _assemble_struct_array(
-                path, groups, sel, f, f.name, 0)
-            if row_ranges:
-                parts, base = [], 0
-                for gi in sel:
-                    n = groups[gi][0].num_rows
-                    r = row_ranges.get(gi)
-                    idx = ([i for lo, hi in r for i in range(lo, hi)]
-                           if r is not None else list(range(n)))
-                    parts.extend(base + i for i in idx)
-                    base += n
-                arr = arr.take(pa.array(parts, pa.int64()))
-            arrays.append(arr)
+                chunks.append(arr if r is None else _take_ranges(arr, r))
+            arrays.append(pa.chunked_array(chunks, type=f.type))
             continue
         chunks = []
         for gi in sel:
@@ -1655,113 +1578,13 @@ def _take_ranges(arr, ranges):
     return arr.take(pa.array(idx, pa.int64()))
 
 
-def _assemble_struct_array(path: str, groups, sel, field,
-                           prefix: str, d_parent: int):
-    """Recursive struct reassembly from def levels alone (no
-    repetition): a node is present where the shared leaf defs reach its
-    presence level; leaf values are present at the leaf's max_def."""
-    import pyarrow as pa
-
-    d_self = d_parent + (1 if field.nullable else 0)
-    children, first_defs = [], None
-    for ch in field.type:
-        cpath = f"{prefix}.{ch.name}"
-        if pa.types.is_struct(ch.type):
-            arr, defs = _assemble_struct_array(
-                path, groups, sel, ch, cpath, d_self)
-        elif pa.types.is_nested(ch.type):
-            raise ValueError(f"list under struct {cpath!r} out of scope")
-        else:
-            parts, defs_parts = [], []
-            for gi in sel:
-                cc = next(c for c in groups[gi] if c.name == cpath)
-                buf, rcc = chunk_reader(path, cc)
-                _, d, vraw = _decode_chunk_levels(buf, rcc, arrow=True)
-                if d is None:
-                    d = np.full(cc.num_values, cc.max_def, np.int64)
-                parts.append(
-                    _leaf_arrow(vraw, d == cc.max_def, ch.type, cc))
-                defs_parts.append(d)
-            arr = (pa.concat_arrays([p.combine_chunks()
-                                     if isinstance(p, pa.ChunkedArray)
-                                     else p for p in parts])
-                   if parts else pa.array([], ch.type))
-            defs = np.concatenate(defs_parts) if defs_parts else \
-                np.zeros(0, np.int64)
-        children.append(arr)
-        if first_defs is None:
-            first_defs = defs
-    mask = None
-    if field.nullable:
-        mask = pa.array(first_defs < d_self)
-    out = pa.StructArray.from_arrays(
-        children, fields=list(field.type), mask=mask)
-    return out, first_defs
-
-
-def _assemble_list_array(data: bytes, cc: ColumnChunkInfo, value_type):
-    """Vectorized Dremel -> pyarrow ListArray for one chunk: offsets
-    from rep boundaries + element counts, row validity from def
-    thresholds, element nulls from def == d_slot."""
-    import pyarrow as pa
-
-    reps, defs, vals = _decode_chunk_levels(data, cc, arrow=True)
-    new_row = reps == 0
-    n_rows = int(new_row.sum())
-    row_idx = np.cumsum(new_row) - 1
-    elem_mask = defs >= cc.d_slot
-    present = defs == cc.max_def
-    counts = np.bincount(row_idx[elem_mask], minlength=n_rows)
-    offs = np.zeros(n_rows + 1, np.int64)
-    np.cumsum(counts, out=offs[1:])
-    row_valid = defs[new_row] >= cc.d_list
-
-    elem_present = present[elem_mask]
-    n_elems = int(elem_mask.sum())
-    if isinstance(vals, np.ndarray):
-        full = np.zeros(n_elems, vals.dtype)
-        full[elem_present] = vals
-        elems = pa.array(full, mask=~elem_present)
-    elif isinstance(vals, pa.Array):   # de-boxed byte-array elements
-        elems = (vals if bool(elem_present.all())
-                 else _expand_present(vals, elem_present))
-    else:                       # legacy python-list fallback
-        it = iter(vals)
-        elems = pa.array(
-            [next(it) if p else None for p in elem_present], pa.binary())
-    elems = elems.cast(value_type)
-    off_arr = pa.array(offs.astype(np.int32),
-                       mask=np.append(~row_valid, False))
-    return pa.ListArray.from_arrays(off_arr, elems)
-
-
-# ------------- general Dremel reassembly (arbitrary nesting) ------------
+# ------------- Dremel record assembly (any nesting) ---------------------
 #
-# The reference unmarshals arbitrarily nested records row-at-a-time
-# via reflection (/root/reference/marshal/unmarshal.go); this is the
-# same record assembly over the SchemaElement tree. Deliberately
-# row-wise (correct-first): deep nesting is off the hot path — flat
-# columns, single-level lists, flat structs and flat maps all keep
-# their vectorized lanes, and this path only engages beyond them.
-
-def _nested_in_nested(t) -> bool:
-    import pyarrow as pa
-
-    if pa.types.is_list(t) or pa.types.is_large_list(t):
-        return pa.types.is_nested(t.value_type)
-    if pa.types.is_map(t):
-        return (pa.types.is_nested(t.key_type)
-                or pa.types.is_nested(t.item_type))
-    if pa.types.is_struct(t):
-        def has_rep(x):
-            if pa.types.is_list(x) or pa.types.is_large_list(x) or \
-                    pa.types.is_map(x):
-                return True
-            return pa.types.is_struct(x) and \
-                any(has_rep(c.type) for c in x)
-        return any(has_rep(c.type) for c in t)
-    return False
-
+# The reference unmarshals nested records row-at-a-time via reflection
+# (marshal/unmarshal.go); this is the same assembly over the
+# level-annotated SchemaElement tree, but vectorized: every node is
+# built from its first leaf's (rep, def) streams with masks and cumsums,
+# no per-row Python. Every list, map and struct column takes this path.
 
 def _walk_tree(elems: list, pos: int, d: int, r: int, prefix: list):
     """SchemaElement subtree -> level-annotated node dict (d = def
@@ -1858,302 +1681,75 @@ def _top_tree(meta: dict, top: str):
     raise ValueError(f"unknown column {top!r}")
 
 
-def _tree_leaves(node) -> list:
-    if node["kind"] == "leaf":
-        return [node]
-    if node["kind"] in ("list",):
-        return _tree_leaves(node["child"])
-    if node["kind"] == "map":
-        return _tree_leaves(node["key"]) + _tree_leaves(node["value"])
-    out = []
-    for ch in node["children"]:
-        out.extend(_tree_leaves(ch))
-    return out
+def _first_leaf(node):
+    while node["kind"] != "leaf":
+        node = (node["child"] if node["kind"] == "list" else
+                node["key"] if node["kind"] == "map" else
+                node["children"][0])
+    return node
 
 
-def _storageize(t):
-    """Arrow type -> physical-storage twin (strings as binary, dates/
-    timestamps as ints) so row-wise built values can be cast back."""
+def _assemble(path: str, chunks_rg: list, arrow_type, tree) -> "object":
+    """One nested column of ONE row group -> pa.Array of ``arrow_type``.
+
+    The instances of a node are the entries of its first leaf with
+    rep <= R and def >= D; (R, D) = (0, 0) at the top, one instance per
+    row. A node is valid where def >= its d. A list/map instance owns
+    the slots (rep <= r_slot, def >= d_slot) from its start up to the
+    next instance, so its offsets count the slots before each instance
+    start, and its children recurse at (r_slot, d_slot). A struct's
+    children keep (R, D), each read from its own first leaf. Arrays are
+    built with the schema's exact types (field names, nullability and
+    leaf metadata included)."""
+    streams: dict = {}
+
+    def stream(leaf):
+        s = streams.get(leaf["path"])
+        if s is None:
+            cc = next(c for c in chunks_rg if c.name == leaf["path"])
+            buf, rcc = chunk_reader(path, cc)
+            rep, defs, vals = _decode_chunk_levels(buf, rcc, arrow=True)
+            if rep is None:
+                rep = np.zeros(cc.num_values, np.int64)
+            if defs is None:
+                defs = np.full(cc.num_values, leaf["d"], np.int64)
+            s = streams[leaf["path"]] = (rep, defs, vals, rcc)
+        return s
+
+    return _build(tree, arrow_type, 0, 0, stream)
+
+
+def _build(node, t, R: int, D: int, stream):
+    """_assemble's walk over one node (``stream(leaf)`` -> the leaf's
+    decoded (rep, def, values, chunk info))."""
     import pyarrow as pa
 
-    if pa.types.is_string(t) or pa.types.is_large_string(t):
-        return pa.binary()
-    if pa.types.is_date32(t):
-        return pa.int32()
-    if pa.types.is_timestamp(t):
-        return pa.int64()
-    if pa.types.is_list(t) or pa.types.is_large_list(t):
-        return pa.list_(_storageize(t.value_type))
-    if pa.types.is_map(t):
-        return pa.map_(_storageize(t.key_type), _storageize(t.item_type))
-    if pa.types.is_struct(t):
-        return pa.struct([pa.field(f.name, _storageize(f.type), f.nullable)
-                          for f in t])
-    return t
-
-
-def _typed_entry_array(vals, defs: np.ndarray, max_def: int,
-                       sel: np.ndarray, atype) -> "object":
-    """Leaf (values, defs) -> typed arrow array over the SELECTED
-    entries (sel bool mask), nulls where def < max_def."""
-    import pyarrow as pa
-
-    pres = (defs == max_def)[sel]
-    n = int(sel.sum())
-    if isinstance(vals, np.ndarray):
-        # values are the present-only stream; position of each entry
-        vidx = np.cumsum(defs == max_def) - 1
-        full = np.zeros(n, vals.dtype)
-        full[pres] = vals[vidx[sel][pres]]
-        return pa.array(full, mask=~pres).cast(atype)
-    vidx = np.cumsum(defs == max_def) - 1
-    sub = vidx[sel]
-    out = [vals[sub[i]] if pres[i] else None for i in range(n)]
-    return pa.array(out, pa.binary()).cast(atype)
-
-
-def _assemble_list_struct(path: str, chunks_rg: list, field,
-                          tree) -> "object | None":
-    """Vectorized lane for list<struct<primitives>>: every leaf shares
-    one entry stream; offsets/validity from the first leaf's levels,
-    element arrays zipped into a StructArray. Returns None when the
-    shape doesn't match (caller falls back to the general path)."""
-    import pyarrow as pa
-
-    child = tree["child"]
-    if child["kind"] != "struct" or any(
-            ch["kind"] != "leaf" for ch in child["children"]):
-        return None
-    d_list, d_slot = tree["d"], tree["d_slot"]
-    leaf_nodes = child["children"]
-    arrays = []
-    reps0 = defs0 = None
-    for ln, f in zip(leaf_nodes, field.type.value_type):
-        cc = next(c for c in chunks_rg if c.name == ln["path"])
-        buf, rcc = chunk_reader(path, cc)
-        rep, defs, vals = _decode_chunk_levels(buf, rcc)
-        if defs is None:
-            defs = np.full(len(rep), ln["d"], np.int64)
-        if reps0 is None:
-            reps0, defs0 = rep, defs
-        ent_mask = defs >= d_slot
-        arrays.append((_typed_entry_array(vals, defs, ln["d"],
-                                          ent_mask, f.type), ln))
-    new_row = reps0 == 0
-    n_rows = int(new_row.sum())
-    row_idx = np.cumsum(new_row) - 1
-    ent_mask = defs0 >= d_slot
-    counts = np.bincount(row_idx[ent_mask], minlength=n_rows)
-    offs = np.zeros(n_rows + 1, np.int64)
-    np.cumsum(counts, out=offs[1:])
-    row_valid = defs0[new_row] >= d_list
-    st_d = child["d"]
-    mask = None
-    if st_d > d_slot:                        # optional struct element
-        mask = pa.array(defs0[ent_mask] < st_d)
-    st = pa.StructArray.from_arrays(
-        [a for a, _ in arrays], fields=list(field.type.value_type),
-        mask=mask)
-    off_arr = pa.array(
-        [None if not row_valid[i] else int(offs[i])
-         for i in range(n_rows)] + [int(offs[-1])], pa.int32())
-    return pa.ListArray.from_arrays(off_arr, st)
-
-
-def _assemble_list_list(path: str, chunks_rg: list, field,
-                        tree) -> "object | None":
-    """Vectorized lane for list<list<primitive>>: inner offsets over
-    all entries, outer offsets at rep<=1."""
-    import pyarrow as pa
-
-    inner = tree["child"]
-    if inner["kind"] != "list" or inner["child"]["kind"] != "leaf":
-        return None
-    leaf = inner["child"]
-    cc = next(c for c in chunks_rg if c.name == leaf["path"])
-    buf, rcc = chunk_reader(path, cc)
-    rep, defs, vals = _decode_chunk_levels(buf, rcc)
-    if defs is None:
-        defs = np.full(len(rep), leaf["d"], np.int64)
-    # inner lists: slots of the OUTER list = entries with rep <= 1
-    o_start = rep <= tree["r"]
-    n_in = int(o_start.sum())
-    in_idx = np.cumsum(o_start) - 1
-    elem_mask = defs >= inner["d_slot"]
-    in_counts = np.bincount(in_idx[elem_mask], minlength=n_in)
-    in_offs = np.zeros(n_in + 1, np.int64)
-    np.cumsum(in_counts, out=in_offs[1:])
-    in_valid = defs[o_start] >= inner["d"]
-    elems = _typed_entry_array(vals, defs, leaf["d"], elem_mask,
-                               field.type.value_type.value_type)
-    in_off_arr = pa.array(
-        [None if not in_valid[i] else int(in_offs[i])
-         for i in range(n_in)] + [int(in_offs[-1])], pa.int32())
-    inner_arr = pa.ListArray.from_arrays(in_off_arr, elems)
-    # outer rows over the inner-slot stream
-    rep_o = rep[o_start]
-    defs_o = defs[o_start]
-    new_row = rep_o == 0
-    n_rows = int(new_row.sum())
-    row_idx = np.cumsum(new_row) - 1
-    slot_mask = defs_o >= tree["d_slot"]
-    counts = np.bincount(row_idx[slot_mask], minlength=n_rows)
-    offs = np.zeros(n_rows + 1, np.int64)
-    np.cumsum(counts, out=offs[1:])
-    row_valid = defs_o[new_row] >= tree["d"]
-    # inner_arr contains one entry per OUTER SLOT only where slot_mask;
-    # but placeholders (empty/null outer) also occupy inner entries —
-    # drop them by taking only real slots
-    if not slot_mask.all():
-        inner_arr = inner_arr.take(
-            pa.array(np.flatnonzero(slot_mask), pa.int64()))
-    off_arr = pa.array(
-        [None if not row_valid[i] else int(offs[i])
-         for i in range(n_rows)] + [int(offs[-1])], pa.int32())
-    return pa.ListArray.from_arrays(off_arr, inner_arr)
-
-
-def _assemble_general(path: str, chunks_rg: list, field,
-                      tree=None) -> "object":
-    """Arbitrarily nested column for ONE row group -> arrow array.
-    Row-wise record assembly from per-leaf (rep, def, values) streams
-    over the level-annotated schema tree (pass ``tree`` to avoid a
-    footer re-read per row group)."""
-    import pyarrow as pa
-
-    if tree is None:
-        tree = _top_tree(read_footer(path), field.name)
-    leaves = _tree_leaves(tree)
-    streams = {}
-    n_rows = None
-    for lf in leaves:
-        cc = next(c for c in chunks_rg if c.name == lf["path"])
-        buf, rcc = chunk_reader(path, cc)
-        rep, defs, vals = _decode_chunk_levels(buf, rcc)
-        n_ent = cc.num_values
-        if rep is None:
-            rep = np.zeros(n_ent, np.int64)
-        if defs is None:
-            defs = np.full(n_ent, lf["d"], np.int64)
-        vlist = vals.tolist() if isinstance(vals, np.ndarray) else vals
-        vidx = np.cumsum(defs == lf["d"]) - 1
-        starts = np.flatnonzero(rep == 0)
-        streams[lf["path"]] = (rep, defs, vlist, vidx, starts)
-        if n_rows is None:
-            n_rows = len(starts)
-        elif len(starts) != n_rows:
-            raise ValueError(
-                f"leaf {lf['path']!r}: row count mismatch")
-
-    def first_leaf(node):
-        while node["kind"] != "leaf":
-            node = (node["child"] if node["kind"] == "list" else
-                    node["key"] if node["kind"] == "map" else
-                    node["children"][0])
-        return node
-
-    def build(node, rng: dict):
-        fl = first_leaf(node)
-        rep0, defs0, _, _, _ = streams[fl["path"]]
-        s0 = rng[fl["path"]][0]
-        d0 = int(defs0[s0])
-        kind = node["kind"]
-        if kind == "leaf":
-            if d0 < node["d"]:
-                return None
-            _, defs, vlist, vidx, _ = streams[node["path"]]
-            return vlist[vidx[s0]]
-        if kind == "struct":
-            if node["optional"] and d0 < node["d"]:
-                return None
-            return {ch["name"]: build(ch, rng)
-                    for ch in node["children"]}
-        # list / map
-        if d0 < node["d"]:
-            return None
-        if d0 < node["d_slot"]:
-            return [] if kind == "list" else {}
-        # split every involved leaf's range at rep <= slot rep level
-        slot_rngs = []
-        r_slot = node["r"]
-        sub_leaves = [lf["path"] for lf in _tree_leaves(node)]
-        per_leaf_slots = {}
-        n_slots = None
-        for lp in sub_leaves:
-            rep, _, _, _, _ = streams[lp]
-            s, e = rng[lp]
-            cuts = [s] + [i for i in range(s + 1, e)
-                          if rep[i] <= r_slot] + [e]
-            segs = list(zip(cuts[:-1], cuts[1:]))
-            per_leaf_slots[lp] = segs
-            if n_slots is None:
-                n_slots = len(segs)
-            elif len(segs) != n_slots:
-                raise ValueError("slot count mismatch across leaves")
-        out = []
-        for k in range(n_slots):
-            srng = {lp: per_leaf_slots[lp][k] for lp in sub_leaves}
-            if kind == "list":
-                out.append(build(node["child"], srng))
-            else:
-                out.append((build(node["key"], srng),
-                            build(node["value"], srng)))
-        return out
-
-    rows = []
-    all_paths = list(streams)
-    for i in range(n_rows):
-        rng = {}
-        for lp in all_paths:
-            rep, _, _, _, starts = streams[lp]
-            s = int(starts[i])
-            e = int(starts[i + 1]) if i + 1 < len(starts) else len(rep)
-            rng[lp] = (s, e)
-        rows.append(build(tree, rng))
-    storage = _storageize(field.type)
-    return pa.array(rows, storage).cast(field.type)
-
-
-def _assemble_map_array(path: str, kcc: ColumnChunkInfo,
-                        vcc: ColumnChunkInfo, map_type) -> "object":
-    """Vectorized reassembly of the canonical MAP encoding: the two
-    leaf chunks share one rep stream; entry structure comes from the
-    key leaf (keys are REQUIRED, def==max_def at every entry), value
-    nulls from the value leaf's defs."""
-    import pyarrow as pa
-
-    kbuf, rkcc = chunk_reader(path, kcc)
-    vbuf, rvcc = chunk_reader(path, vcc)
-    reps, kdefs, kvals = _decode_chunk_levels(kbuf, rkcc, arrow=True)
-    _, vdefs, vvals = _decode_chunk_levels(vbuf, rvcc, arrow=True)
-    new_row = reps == 0
-    n_rows = int(new_row.sum())
-    row_idx = np.cumsum(new_row) - 1
-    ent_mask = kdefs >= kcc.d_slot        # real entries (not placeholders)
-    counts = np.bincount(row_idx[ent_mask], minlength=n_rows)
-    offs = np.zeros(n_rows + 1, np.int64)
-    np.cumsum(counts, out=offs[1:])
-    row_valid = kdefs[new_row] >= kcc.d_list
-
-    def _typed(vals, defs, cc, atype):
-        pres = (defs == cc.max_def)[ent_mask]   # per real entry
-        n_ent = int(ent_mask.sum())
-        if isinstance(vals, np.ndarray):
-            full = np.zeros(n_ent, vals.dtype)
-            full[pres] = vals
-            return pa.array(full, mask=~pres).cast(atype)
-        if isinstance(vals, pa.Array):          # de-boxed byte stream
-            arr = vals if bool(pres.all()) else _expand_present(vals, pres)
-            return arr if arr.type == atype else arr.cast(atype)
-        it = iter(vals)
-        return pa.array([next(it) if p else None for p in pres],
-                        pa.binary()).cast(atype)
-
-    keys = _typed(kvals, kdefs, kcc, map_type.key_type)
-    items = _typed(vvals, vdefs, vcc, map_type.item_type)
-    off_arr = pa.array(offs.astype(np.int32),
-                       mask=np.append(~row_valid, False))
-    return pa.MapArray.from_arrays(off_arr, keys, items)
+    rep, defs, vals, cc = stream(_first_leaf(node))
+    inst = (rep <= R) & (defs >= D)
+    d_inst = defs[inst]
+    kind = node["kind"]
+    if kind == "leaf":
+        return _leaf_arrow(vals, d_inst == node["d"], t, cc)
+    valid = d_inst >= node["d"]
+    if kind == "struct":
+        return pa.StructArray.from_arrays(
+            [_build(ch, f.type, R, D, stream)
+             for ch, f in zip(node["children"], t)],
+            fields=list(t),
+            mask=None if valid.all() else pa.array(~valid))
+    r_s, d_s = node["r"], node["d_slot"]
+    before = np.zeros(len(rep) + 1, np.int64)
+    np.cumsum((rep <= r_s) & (defs >= d_s), out=before[1:])
+    offs = np.append(before[:-1][inst], before[-1]).astype(np.int32)
+    offs = (pa.array(offs) if valid.all() else
+            pa.array(offs, mask=np.append(~valid, False)))
+    if kind == "map":
+        return pa.MapArray.from_arrays(
+            offs, _build(node["key"], t.key_type, r_s, d_s, stream),
+            _build(node["value"], t.item_type, r_s, d_s, stream), type=t)
+    return pa.ListArray.from_arrays(
+        offs, _build(node["child"], t.value_type, r_s, d_s, stream),
+        type=t)
 
 
 # --- split-block bloom filters (parquet spec SBBF) ----------------------

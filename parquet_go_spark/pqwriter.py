@@ -163,19 +163,13 @@ class _Col:
     np_dtype: np.dtype | None = None  # numeric storage dtype
     scale: int | None = None          # DECIMAL only
     precision: int | None = None
-    elem: "_Col | None" = None        # LIST: the element column
-    elem_name: str = "element"
     int96: bool = False               # emit physical INT96 (12-byte FLBA
                                       # bytes, legacy declared type)
     geo: bool = False                 # GEOMETRY/GEOGRAPHY: fold per-chunk
                                       # GeospatialStatistics, omit min/max
 
 
-# LIST columns always use the canonical 3-level optional/repeated/
-# optional encoding (what every modern writer emits), so the Dremel
-# thresholds are constants: max_rep 1; def 0 null row, 1 empty list,
-# 2 null element, 3 present element
-L_DEF, L_SLOT, L_LIST, CV_LIST = 3, 2, 1, 3
+CV_LIST = 3                  # ConvertedType LIST
 
 
 @dataclass
@@ -409,20 +403,6 @@ def _map_type(field: pa.Field) -> _Col:
         return _Col(field.name, T_BYTE_ARRAY)
     if pa.types.is_fixed_size_binary(t):
         return _Col(field.name, T_FLBA, type_length=t.byte_width)
-    if pa.types.is_list(t) or pa.types.is_large_list(t):
-        ef = t.value_field
-        if pa.types.is_nested(ef.type):
-            raise ValueError(
-                f"pqwriter: nested repetition in {field.name!r} out of "
-                "scope (single-level lists of primitives)")
-        inner = _map_type(pa.field(ef.name or "element", ef.type, True))
-        c = _Col(field.name, inner.ptype, type_length=inner.type_length,
-                 converted=inner.converted, logical=inner.logical,
-                 np_dtype=inner.np_dtype, scale=inner.scale,
-                 precision=inner.precision)
-        c.elem = inner
-        c.elem_name = ef.name or "element"
-        return c
     if pa.types.is_decimal(t):
         # spec §DECIMAL: INT32 through 9 digits, INT64 through 18,
         # FLBA big-endian two's complement past that
@@ -926,133 +906,14 @@ def _extract_vals(col: _Col, nonnull: pa.Array):
     return np.asarray(nonnull.cast(cast_t))
 
 
-def _list_levels(arr: pa.Array):
-    """ListArray -> (rep, def, elem_array) in entry order (Dremel
-    shredding, vectorized). Null/empty rows contribute one placeholder
-    entry; elements carry def L_SLOT (null) or L_DEF (present)."""
-    offs = np.asarray(arr.offsets, np.int64)
-    row_valid = np.asarray(arr.is_valid())
-    counts = np.where(row_valid, np.diff(offs), 0)
-    ent = np.maximum(counts, 1)
-    n_ent = int(ent.sum())
-    starts = np.cumsum(ent) - ent
-    rep = np.ones(n_ent, np.uint8)
-    rep[starts] = 0
-    # element stream for VALID rows. Dense fast path: with no null rows
-    # the union of per-row slices is one contiguous range — a zero-copy
-    # slice instead of a 100M-element selection mask (the mask's
-    # add.at/cumsum pass dominated list-write profiles)
-    child = arr.values
-    if len(offs) and row_valid.all():
-        elem_arr = child.slice(int(offs[0]), int(offs[-1] - offs[0]))
-    else:
-        m = np.zeros(len(child) + 1, np.int64)
-        lo = offs[:-1][row_valid & (counts > 0)]
-        hi = offs[1:][row_valid & (counts > 0)]
-        np.add.at(m, lo, 1)
-        np.add.at(m, hi, -1)
-        sel = np.cumsum(m[:-1]) > 0
-        elem_arr = child.take(np.flatnonzero(sel)) if sel.any() else \
-            child.slice(0, 0)
-    defs = np.empty(n_ent, np.uint8)
-    placeholder = starts[counts == 0]
-    is_elem = np.ones(n_ent, bool)
-    is_elem[placeholder] = False
-    elem_valid = np.asarray(elem_arr.is_valid()) if len(elem_arr) else \
-        np.zeros(0, bool)
-    defs[is_elem] = np.where(elem_valid, L_DEF, L_SLOT)
-    defs[placeholder] = np.where(row_valid[counts == 0], L_LIST, 0)
-    return rep, defs, elem_arr
-
-
-def _map_levels(arr: "pa.MapArray"):
-    """MapArray -> (rep, key_defs, val_defs, keys, items) in entry
-    order (canonical MAP encoding: optional group (MAP) > repeated
-    key_value > required key + optional value — key max_def 2, value
-    max_def 3, shared rep stream; reference map marshalling:
-    /root/reference/marshal/marshal.go ParquetMapStruct)."""
-    offs = np.asarray(arr.offsets, np.int64)
-    row_valid = np.asarray(arr.is_valid())
-    counts = np.where(row_valid, np.diff(offs), 0)
-    ent = np.maximum(counts, 1)
-    n_ent = int(ent.sum())
-    starts = np.cumsum(ent) - ent
-    rep = np.ones(n_ent, np.uint8)
-    rep[starts] = 0
-    keys, items = arr.keys, arr.items
-    if len(offs) and row_valid.all():
-        ksel = keys.slice(int(offs[0]), int(offs[-1] - offs[0]))
-        vsel = items.slice(int(offs[0]), int(offs[-1] - offs[0]))
-    else:
-        m = np.zeros(len(keys) + 1, np.int64)
-        lo = offs[:-1][row_valid & (counts > 0)]
-        hi = offs[1:][row_valid & (counts > 0)]
-        np.add.at(m, lo, 1)
-        np.add.at(m, hi, -1)
-        sel = np.cumsum(m[:-1]) > 0
-        idx = np.flatnonzero(sel)
-        ksel = keys.take(idx) if len(idx) else keys.slice(0, 0)
-        vsel = items.take(idx) if len(idx) else items.slice(0, 0)
-    placeholder = starts[counts == 0]
-    is_ent = np.ones(n_ent, bool)
-    is_ent[placeholder] = False
-    ph_def = np.where(row_valid[counts == 0], 1, 0).astype(np.uint8)
-    key_defs = np.empty(n_ent, np.uint8)
-    key_defs[is_ent] = 2                   # keys are REQUIRED
-    key_defs[placeholder] = ph_def
-    val_defs = np.empty(n_ent, np.uint8)
-    vvalid = (np.asarray(vsel.is_valid()) if len(vsel)
-              else np.zeros(0, bool))
-    val_defs[is_ent] = np.where(vvalid, 3, 2)
-    val_defs[placeholder] = ph_def
-    return rep, key_defs, val_defs, ksel, vsel
-
-
-def _write_map_chunks(out: bytearray, field: pa.Field, arr: pa.Array,
-                      codec_id: int, page_rows: int, encodings: dict,
-                      write_stats: bool, page_version: int,
-                      chunk_crypto, rgi: int, col_base: int,
-                      want_pidx: bool):
-    """MAP column -> TWO leaf chunks (key, value) sharing one rep
-    stream. Returns ([chunk, chunk], total_uncompressed)."""
-    if not isinstance(arr, pa.MapArray):
-        arr = arr.cast(pa.map_(field.type.key_type, field.type.item_type))
-    rep, kdefs, vdefs, ksel, vsel = _map_levels(arr)
-    name = field.name
-    tot = 0
-    chunks = []
-    for leaf, defs, elem, md in (
-            ("key", kdefs, ksel, 2), ("value", vdefs, vsel, 3)):
-        lcol = _map_type(pa.field(
-            leaf, arr.type.key_type if leaf == "key"
-            else arr.type.item_type, leaf == "value"))
-        lpath = [name, "key_value", leaf]
-        pc, crypto = chunk_crypto(".".join(lpath), lpath, rgi,
-                                  col_base + len(chunks))
-        ch, u, _ = _write_levels_chunk(
-            out, lcol, rep, defs, elem, len(arr), lpath, md, codec_id,
-            page_rows, encodings.get(".".join(lpath), "auto"),
-            write_stats, page_version, pc, want_pidx)
-        ch.crypto = crypto
-        chunks.append(ch)
-        tot += u
-    return chunks, tot
-
-
-# ------------------- general Dremel shredding (arbitrary nesting) -------
+# ------------------- Dremel shredding (any nesting) --------------------
 #
 # The reference marshals arbitrarily nested Go values via reflection
 # (/root/reference/marshal/marshal.go:53-375 node handlers); this is
 # the same walk over an arrow type tree, but VECTORIZED: every list
 # level expands its entry stream with repeat/cumsum — no per-row
-# Python. Single-level lists / flat structs / flat maps keep their
-# dedicated fast paths; only deeper nesting routes through here.
-
-# routing predicate shared with the reader (single source of truth:
-# pqinterop._nested_in_nested) — writer shred lanes and reader
-# assembly lanes MUST agree on which shapes are "general"
-from .pqinterop import _nested_in_nested as _needs_general  # noqa: E402
-
+# Python. Every list, map and struct column is written through here;
+# flat primitive columns keep _write_chunk.
 
 @dataclass
 class _LeafShred:
@@ -1060,91 +921,126 @@ class _LeafShred:
     field: pa.Field        # primitive leaf (normalized nullability)
     rep: np.ndarray
     defs: np.ndarray
-    values: pa.Array       # present (non-null) leaf values, entry order
+    values: pa.Array       # leaf values of the present entries, in entry
+                           # order (nulls allowed: the chunk drops them)
     max_def: int
     max_rep: int
 
 
 def _shred_general(arr: pa.Array, field: pa.Field, path: list[str],
-                   rep: np.ndarray, defs: np.ndarray,
-                   active: np.ndarray, idx: np.ndarray, r: int, d: int,
-                   out: list, force_opt: bool = False,
+                   rep: np.ndarray, defs: "np.ndarray | None", idx,
+                   r: int, d: int, out: list, force_opt: bool = False,
                    force_req: bool = False) -> None:
-    """Entries align 1:1 with (rep, defs, idx); idx indexes into
-    ``arr`` (-1 at placeholder entries of absent ancestors). Lists and
+    """Entries align 1:1 with ``rep``. ``idx`` is either an int64 array
+    indexing ``arr`` per entry (-1 at placeholder entries of absent
+    ancestors) with ``defs`` alongside — an entry is present down to
+    here where its def equals ``d`` — or, on the dense path, a (lo, hi)
+    range of ``arr``: every entry present, so ``defs`` is None (every
+    def equals ``d``) and lists keep their values zero-copy. The dense
+    path ends at the first null group or null/empty list. Lists and
     maps are always declared OPTIONAL (canonical emission); direct
     list elements / map values are forced optional, map keys required."""
     t = field.type
     is_list = pa.types.is_list(t) or pa.types.is_large_list(t)
     is_map = pa.types.is_map(t)
+    is_leaf = not (is_list or is_map or pa.types.is_struct(t))
     optional = (not force_req) and (force_opt or field.nullable
                                     or is_list or is_map)
+    offs = (np.asarray(arr.offsets, np.int64) if is_list or is_map
+            else None)
+    if isinstance(idx, tuple) and not is_leaf:
+        lo, hi = idx
+        if (optional and arr.slice(lo, hi - lo).null_count) or (
+                offs is not None and not np.diff(offs[lo:hi + 1]).all()):
+            # a null group or an empty list ends the dense path
+            idx = np.arange(lo, hi, dtype=np.int64)
+            defs = np.full(hi - lo, d, np.uint8)
+    dense = isinstance(idx, tuple)
     if optional:
         d += 1
-        av = np.zeros(len(idx), bool)
-        am = active & (idx >= 0)
-        if len(arr) and am.any():
-            valid = np.asarray(arr.is_valid())
-            av[am] = valid[idx[am]]
-        defs = defs + av.astype(np.uint8)
-        active = av
+        if not dense:
+            active = defs == d - 1
+            valid = np.zeros(len(idx), bool)
+            if active.any():
+                valid[active] = np.asarray(arr.is_valid())[idx[active]]
+            defs = defs + valid.astype(np.uint8)
     if pa.types.is_struct(t):
         for ch in t:
             child = arr.field(ch.name) if len(arr) else \
                 pa.array([], ch.type)
-            _shred_general(child, ch, path + [ch.name], rep, defs,
-                           active, idx, r, d, out)
+            _shred_general(child, ch, path + [ch.name], rep, defs, idx,
+                           r, d, out)
         return
-    if is_list or is_map:
-        offs = np.asarray(arr.offsets, np.int64)
-        lens = np.diff(offs)
+    if is_leaf:
+        if dense:
+            vals = arr.slice(idx[0], idx[1] - idx[0])
+            defs = np.full(len(vals), d, np.uint8)
+            if optional and vals.null_count:
+                defs[~np.asarray(vals.is_valid())] = d - 1
+        else:
+            pres = defs == d
+            vals = (arr.take(pa.array(idx[pres], pa.int64()))
+                    if pres.any() else arr.slice(0, 0))
+        out.append(_LeafShred(
+            path, pa.field(path[-1], t, optional, field.metadata),
+            np.asarray(rep, np.uint8), np.asarray(defs, np.uint8), vals,
+            d, r))
+        return
+    r_child, d_child = r + 1, d + 1
+    if dense:
+        # every list valid and non-empty: the child entries are one
+        # contiguous run of the values
+        o = offs[idx[0]:idx[1] + 1]
+        new_rep = np.full(int(o[-1] - o[0]), r_child, np.uint8)
+        new_rep[o[:-1] - o[0]] = rep
+        new_defs, new_idx = None, (int(o[0]), int(o[-1]))
+    else:
+        active = defs == d
         counts = np.zeros(len(idx), np.int64)
-        am = active & (idx >= 0)
-        counts[am] = lens[idx[am]]
+        counts[active] = np.diff(offs)[idx[active]]
         ent = np.maximum(counts, 1)
-        n_new = int(ent.sum())
         starts = np.cumsum(ent) - ent
-        r_child = r + 1
-        new_rep = np.full(n_new, r_child, np.uint8)
+        new_rep = np.full(int(ent.sum()), r_child, np.uint8)
         new_rep[starts] = rep
         new_defs = np.repeat(
             np.where(counts > 0, defs + 1, defs), ent).astype(np.uint8)
-        new_active = np.repeat(counts > 0, ent)
-        child_start = np.full(len(idx), 0, np.int64)
-        child_start[am] = offs[:-1][idx[am]]
-        within = np.arange(n_new) - np.repeat(starts, ent)
-        new_idx = np.where(new_active,
+        child_start = np.zeros(len(idx), np.int64)
+        child_start[active] = offs[:-1][idx[active]]
+        within = np.arange(len(new_rep)) - np.repeat(starts, ent)
+        new_idx = np.where(np.repeat(counts > 0, ent),
                            np.repeat(child_start, ent) + within, -1)
-        d_child = d + 1
-        if is_map:
-            _shred_general(
-                arr.keys, pa.field("key", t.key_type, False),
-                path + ["key_value", "key"], new_rep, new_defs,
-                new_active, new_idx, r_child, d_child, out,
-                force_req=True)
-            _shred_general(
-                arr.items, pa.field("value", t.item_type, True),
-                path + ["key_value", "value"], new_rep, new_defs,
-                new_active, new_idx, r_child, d_child, out,
-                force_opt=True)
-        else:
-            ef = t.value_field
-            _shred_general(
-                arr.values, pa.field(ef.name or "element", ef.type,
-                                     True),
-                path + ["list", ef.name or "element"], new_rep,
-                new_defs, new_active, new_idx, r_child, d_child, out,
-                force_opt=True)
+    if is_map:
+        _shred_general(
+            arr.keys, pa.field("key", t.key_type, False,
+                               t.key_field.metadata),
+            path + ["key_value", "key"], new_rep, new_defs, new_idx,
+            r_child, d_child, out, force_req=True)
+        _shred_general(
+            arr.items, pa.field("value", t.item_type, True,
+                                t.item_field.metadata),
+            path + ["key_value", "value"], new_rep, new_defs, new_idx,
+            r_child, d_child, out, force_opt=True)
         return
-    # primitive leaf: present exactly where active (defs == d there)
-    pres = active & (idx >= 0)
-    if pres.any():
-        lvals = arr.take(pa.array(idx[pres], pa.int64()))
-    else:
-        lvals = arr.slice(0, 0)
-    out.append(_LeafShred(path, pa.field(path[-1], t, optional),
-                          rep.astype(np.uint8), defs.astype(np.uint8),
-                          lvals, d, r))
+    ef = t.value_field
+    _shred_general(
+        arr.values, pa.field(ef.name or "element", ef.type, True,
+                             ef.metadata),
+        path + ["list", ef.name or "element"], new_rep, new_defs,
+        new_idx, r_child, d_child, out, force_opt=True)
+
+
+def _leaf_schema_elem(leaf: _Col, name: str, optional: bool) -> bytes:
+    """One primitive leaf's SchemaElement."""
+    return _tstruct([
+        (1, CT_I32, 3 if leaf.int96 else leaf.ptype),
+        (2, CT_I32, None if leaf.int96 else leaf.type_length),
+        (3, CT_I32, 1 if optional else 0),
+        (4, CT_BINARY, name),
+        (6, CT_I32, leaf.converted),
+        (7, CT_I32, leaf.scale),
+        (8, CT_I32, leaf.precision),
+        (10, CT_STRUCT, leaf.logical),
+    ])
 
 
 def _emit_schema_general(field: pa.Field, name: str, schema_elems: list,
@@ -1164,7 +1060,7 @@ def _emit_schema_general(field: pa.Field, name: str, schema_elems: list,
         ]))
         ef = t.value_field
         _emit_schema_general(pa.field(ef.name or "element", ef.type,
-                                      True),
+                                      True, ef.metadata),
                              ef.name or "element", schema_elems,
                              force_opt=True)
         return
@@ -1176,9 +1072,11 @@ def _emit_schema_general(field: pa.Field, name: str, schema_elems: list,
         schema_elems.append(_tstruct([
             (3, CT_I32, 2), (4, CT_BINARY, "key_value"), (5, CT_I32, 2),
         ]))
-        _emit_schema_general(pa.field("key", t.key_type, False), "key",
+        _emit_schema_general(pa.field("key", t.key_type, False,
+                                      t.key_field.metadata), "key",
                              schema_elems, force_req=True)
-        _emit_schema_general(pa.field("value", t.item_type, True),
+        _emit_schema_general(pa.field("value", t.item_type, True,
+                                      t.item_field.metadata),
                              "value", schema_elems, force_opt=True)
         return
     optional = (not force_req) and (force_opt or field.nullable)
@@ -1191,63 +1089,45 @@ def _emit_schema_general(field: pa.Field, name: str, schema_elems: list,
         for ch in t:
             _emit_schema_general(ch, ch.name, schema_elems)
         return
-    leaf = _map_type(pa.field(name, t, optional))
-    schema_elems.append(_tstruct([
-        (1, CT_I32, leaf.ptype),
-        (2, CT_I32, leaf.type_length),
-        (3, CT_I32, 1 if optional else 0),
-        (4, CT_BINARY, name),
-        (6, CT_I32, leaf.converted),
-        (7, CT_I32, leaf.scale),
-        (8, CT_I32, leaf.precision),
-        (10, CT_STRUCT, leaf.logical),
-    ]))
+    leaf = _map_type(pa.field(name, t, optional, field.metadata))
+    schema_elems.append(_leaf_schema_elem(leaf, name, optional))
 
 
 def _write_general_chunks(out: bytearray, field: pa.Field,
                           arr: pa.Array, codec_id: int, page_rows: int,
                           encodings: dict, write_stats: bool,
                           page_version: int, chunk_crypto, rgi: int,
-                          col_base: int, want_pidx: bool):
-    """Arbitrarily nested column -> one leaf chunk per primitive leaf
-    via the general shredder. Returns ([chunks], total_uncompressed)."""
+                          col_base: int, want_pidx: bool,
+                          bloom_columns, bloom_sizes: dict):
+    """List / map / struct column -> one leaf chunk per primitive leaf
+    via the Dremel shredder. Per-leaf options (encodings, blooms, bloom
+    sizes) resolve by dotted leaf path, then — for a column with a
+    single leaf — by the top-level column name. Returns ([chunks],
+    total_uncompressed)."""
     n = len(arr)
     specs: list[_LeafShred] = []
-    _shred_general(arr, field, [field.name], np.zeros(n, np.uint8),
-                   np.zeros(n, np.uint8), np.ones(n, bool),
-                   np.arange(n, dtype=np.int64), 0, 0, specs)
+    _shred_general(arr, field, [field.name], np.zeros(n, np.uint8), None,
+                   (0, n), 0, 0, specs)
+    names = [field.name] if len(specs) == 1 else []
     chunks, tot = [], 0
     for sp in specs:
         lcol = _map_type(sp.field)
         dotted = ".".join(sp.path)
-        pc, crypto = chunk_crypto(dotted, sp.path, rgi,
-                                  col_base + len(chunks))
+        keys = [dotted] + names
+        pc, crypto = chunk_crypto(sp.path, rgi, col_base + len(chunks))
         ch, u, _ = _write_levels_chunk(
             out, lcol, sp.rep, sp.defs, sp.values, n, sp.path,
             sp.max_def, codec_id, page_rows,
-            encodings.get(dotted, "auto"), write_stats, page_version,
-            pc, want_pidx, max_rep=sp.max_rep)
+            next((encodings[k] for k in keys if k in encodings), "auto"),
+            write_stats, page_version, pc, want_pidx, max_rep=sp.max_rep)
         ch.crypto = crypto
+        if any(k in bloom_columns for k in keys):
+            ch.bloom_hashes = _bloom_hashes(lcol, sp.values)
+            ch.bloom_size = next(
+                (bloom_sizes[k] for k in keys if k in bloom_sizes), None)
         chunks.append(ch)
         tot += u
     return chunks, tot
-
-
-def _write_list_chunk(out: bytearray, col: _Col, arr: pa.Array,
-                      codec_id: int, page_rows: int, enc_want: str,
-                      write_stats: bool, page_version: int = 1,
-                      pc: "_PageCrypt | None" = None,
-                      want_pidx: bool = False):
-    """LIST column chunk: rep+def level streams ahead of the element
-    values, pages split on ROW boundaries (a record never splits)."""
-    n_rows = len(arr)
-    if not isinstance(arr, (pa.ListArray, pa.LargeListArray)):
-        arr = arr.cast(pa.list_(arr.type.value_type))
-    rep, defs, elem_arr = _list_levels(arr)
-    return _write_levels_chunk(
-        out, col, rep, defs, elem_arr, n_rows,
-        [col.name, "list", col.elem_name], L_DEF, codec_id, page_rows,
-        enc_want, write_stats, page_version, pc, want_pidx)
 
 
 def _write_levels_chunk(out: bytearray, col: _Col, rep: np.ndarray,
@@ -1257,9 +1137,10 @@ def _write_levels_chunk(out: bytearray, col: _Col, rep: np.ndarray,
                         write_stats: bool, page_version: int = 1,
                         pc: "_PageCrypt | None" = None,
                         want_pidx: bool = False, max_rep: int = 1):
-    """One REPEATED leaf chunk from precomputed Dremel streams (shared
-    by LIST elements and MAP key/value leaves): values are present at
-    ``max_def``; pages split on ROW boundaries (rep==0)."""
+    """One leaf chunk of a list / map / struct column from its Dremel
+    streams: values are present at ``max_def``; pages split on ROW
+    boundaries (rep==0), so a record never splits. Level histograms are
+    omitted for levels that are always 0 (max_rep or max_def 0)."""
     n_ent = len(rep)
     nonnull = elem_arr.drop_null()
     vals = _extract_vals(col, nonnull)
@@ -1334,9 +1215,11 @@ def _write_levels_chunk(out: bytearray, col: _Col, rep: np.ndarray,
             pages.append(_PageRec(
                 pg_off, c, row, (e_ent - s_ent) - (v_hi - v_lo), mn, mx,
                 dh=np.bincount(defs[s_ent:e_ent],
-                               minlength=max_def + 1).tolist(),
+                               minlength=max_def + 1).tolist()
+                if max_def else None,
                 rh=np.bincount(rep[s_ent:e_ent],
-                               minlength=max_rep + 1).tolist(),
+                               minlength=max_rep + 1).tolist()
+                if max_rep else None,
                 ub=ub))
         tot_u += u
         tot_c += c
@@ -1372,37 +1255,22 @@ def _write_levels_chunk(out: bytearray, col: _Col, rep: np.ndarray,
 
 def _write_chunk(out: bytearray, col: _Col, arr: pa.Array, codec_id: int,
                  page_rows: int, enc_want: str, write_stats: bool,
-                 levels: tuple | None = None, page_version: int = 1,
-                 pc: "_PageCrypt | None" = None, want_pidx: bool = False,
-                 force_optional: bool = False):
-    """Append one column chunk's pages; return its ColumnChunk struct.
-
-    ``levels=(defs, max_def, path)`` is the shredded-STRUCT form: defs
-    is the full Dremel definition stream, ``arr`` the already-filtered
-    present leaf values, ``path`` the dotted schema path."""
-    if col.elem is not None:
-        return _write_list_chunk(out, col, arr, codec_id, page_rows,
-                                 enc_want, write_stats, page_version, pc,
-                                 want_pidx)
-    if levels is None:
-        n_total = len(arr)
-        null_count = arr.null_count
-        # optionality is a COLUMN property, not a chunk property: a
-        # null-free row group of a column that has nulls elsewhere
-        # must still carry def-level streams, or the schema's OPTIONAL
-        # declaration makes every reader mis-parse its pages (pyarrow:
-        # "corrupt data page"; found by review, pinned in
-        # test_pqwriter.py::test_nulls_in_one_row_group_only)
-        optional = force_optional or null_count > 0
-        defs = np.asarray(arr.is_valid(), np.uint8) if optional else None
-        max_def, path = 1, [col.name]
-        nonnull = arr.drop_null() if optional else arr
-    else:
-        defs, max_def, path = levels
-        n_total = len(defs)
-        nonnull = arr
-        null_count = n_total - len(nonnull)
-        optional = True
+                 page_version: int = 1, pc: "_PageCrypt | None" = None,
+                 want_pidx: bool = False, force_optional: bool = False):
+    """Append one flat primitive column chunk's pages; return its
+    ColumnChunk struct."""
+    n_total = len(arr)
+    null_count = arr.null_count
+    # optionality is a COLUMN property, not a chunk property: a
+    # null-free row group of a column that has nulls elsewhere
+    # must still carry def-level streams, or the schema's OPTIONAL
+    # declaration makes every reader mis-parse its pages (pyarrow:
+    # "corrupt data page"; found by review, pinned in
+    # test_pqwriter.py::test_nulls_in_one_row_group_only)
+    optional = force_optional or null_count > 0
+    defs = np.asarray(arr.is_valid(), np.uint8) if optional else None
+    max_def, path = 1, [col.name]
+    nonnull = arr.drop_null() if optional else arr
     bw_def = max_def.bit_length()
     vals = _extract_vals(col, nonnull)
 
@@ -1472,7 +1340,7 @@ def _write_chunk(out: bytearray, col: _Col, arr: pa.Array, codec_id: int,
                   else None)
             dh = (np.bincount(defs[row:hi_row],
                               minlength=max_def + 1).tolist()
-                  if defs is not None and max_def > 0 else None)
+                  if defs is not None else None)
             pages.append(_PageRec(pg_off, c, row,
                                   (hi_row - row) - (v_hi - v_lo), mn, mx,
                                   dh=dh, ub=ub))
@@ -1508,35 +1376,6 @@ def _write_chunk(out: bytearray, col: _Col, arr: pa.Array, codec_id: int,
                   col=col), tot_u, optional
 
 
-def _shred_struct(arr: pa.Array, field: pa.Field, path: list[str],
-                  cur_defs: np.ndarray, present: np.ndarray,
-                  md: int, out_specs: list) -> None:
-    """Dremel shredding for STRUCT trees (def levels only): walk the
-    field tree accumulating, per row, the count of present optional
-    nodes; emit (path, leaf_field, defs, present_leaf_values, max_def)
-    per primitive leaf."""
-    if field.nullable:
-        v = (np.asarray(arr.is_valid())
-             if arr.null_count or isinstance(arr, pa.StructArray)
-             else np.ones(len(arr), bool)) & present
-        cur_defs = cur_defs + v.astype(np.uint8)
-        present = v
-        md += 1
-    if pa.types.is_struct(field.type):
-        for ch in field.type:
-            _shred_struct(arr.field(ch.name) if len(arr) else
-                          pa.array([], ch.type),
-                          ch, path + [ch.name], cur_defs, present, md,
-                          out_specs)
-    elif pa.types.is_nested(field.type):
-        raise ValueError(f"list under struct {'.'.join(path)!r} out of "
-                        "scope")
-    else:
-        keep = pa.array(present)
-        out_specs.append((path, field, cur_defs,
-                          arr.filter(keep) if len(arr) else arr, md))
-
-
 def _variant_annotation(field: pa.Field) -> list:
     """Shared VARIANT group handling for both schema emitters: validate
     the spec layout (metadata/value children) and return the
@@ -1552,90 +1391,12 @@ def _variant_annotation(field: pa.Field) -> list:
     return [(10, CT_STRUCT, _logical(16, _tstruct([(1, 3, 1)])))]
 
 
-def _emit_schema_field(field: pa.Field, col: _Col | None,
-                       schema_elems: list, declared_optional: bool):
-    """Serialize one top-level arrow field's SchemaElement subtree."""
-    if col is not None and col.elem is not None:     # LIST (3-level)
-        schema_elems.append(_tstruct([
-            (3, CT_I32, 1),
-            (4, CT_BINARY, col.name),
-            (5, CT_I32, 1),
-            (6, CT_I32, CV_LIST),
-            (10, CT_STRUCT, _logical(3)),
-        ]))
-        schema_elems.append(_tstruct([
-            (3, CT_I32, 2), (4, CT_BINARY, "list"), (5, CT_I32, 1),
-        ]))
-        schema_elems.append(_tstruct([
-            (1, CT_I32, col.ptype),
-            (2, CT_I32, col.type_length),
-            (3, CT_I32, 1),
-            (4, CT_BINARY, col.elem_name),
-            (6, CT_I32, col.converted),
-            (7, CT_I32, col.scale),
-            (8, CT_I32, col.precision),
-            (10, CT_STRUCT, col.logical),
-        ]))
-        return
-    if pa.types.is_map(field.type):                  # MAP group
-        # always OPTIONAL, like the LIST emit: the level streams are
-        # built against the 0/1/2(/3) canonical thresholds
-        schema_elems.append(_tstruct([
-            (3, CT_I32, 1),
-            (4, CT_BINARY, field.name),
-            (5, CT_I32, 1),
-            (6, CT_I32, 1),                          # ConvertedType MAP
-            (10, CT_STRUCT, _logical(2)),            # LogicalType MAP
-        ]))
-        schema_elems.append(_tstruct([
-            (3, CT_I32, 2), (4, CT_BINARY, "key_value"), (5, CT_I32, 2),
-        ]))
-        kcol = _map_type(pa.field("key", field.type.key_type, False))
-        vcol = _map_type(pa.field("value", field.type.item_type, True))
-        for leaf, req in ((kcol, 0), (vcol, 1)):
-            schema_elems.append(_tstruct([
-                (1, CT_I32, leaf.ptype),
-                (2, CT_I32, leaf.type_length),
-                (3, CT_I32, req),
-                (4, CT_BINARY, leaf.name),
-                (6, CT_I32, leaf.converted),
-                (7, CT_I32, leaf.scale),
-                (8, CT_I32, leaf.precision),
-                (10, CT_STRUCT, leaf.logical),
-            ]))
-        return
-    if pa.types.is_struct(field.type):               # STRUCT group
-        schema_elems.append(_tstruct([
-            (3, CT_I32, 1 if field.nullable else 0),
-            (4, CT_BINARY, field.name),
-            (5, CT_I32, field.type.num_fields),
-        ] + _variant_annotation(field)))
-        for ch in field.type:
-            _emit_schema_field(ch, _map_type(ch) if not
-                               pa.types.is_nested(ch.type) else None,
-                               schema_elems, ch.nullable)
-        return
-    leaf = col if col is not None else _map_type(field)
-    schema_elems.append(_tstruct([
-        (1, CT_I32, 3 if leaf.int96 else leaf.ptype),
-        (2, CT_I32, None if leaf.int96 else leaf.type_length),
-        (3, CT_I32, 1 if declared_optional else 0),
-        (4, CT_BINARY, field.name),
-        (6, CT_I32, leaf.converted),
-        (7, CT_I32, leaf.scale),
-        (8, CT_I32, leaf.precision),
-        (10, CT_STRUCT, leaf.logical),
-    ]))
-
-
 def _bloom_hashes(col: _Col, arr: pa.Array) -> np.ndarray:
     """xxHash64 (seed 0) of the PLAIN-encoded distinct values — the
     parquet spec's SBBF hash input (engine kernel: bloom.py, the same
     split-block filter the PGS store uses)."""
     from . import bloom as bloommod
 
-    while pa.types.is_list(arr.type) or pa.types.is_large_list(arr.type):
-        arr = arr.flatten()
     uniq = pc.unique(arr).drop_null()
     if len(uniq) == 0:
         return np.zeros(0, np.uint64)
@@ -1793,13 +1554,12 @@ def write_table(table: pa.Table, path: str, compression: str = "snappy",
                 table = table.set_column(
                     i, pa.field(f.name, pa.binary(12), f.nullable), conv)
                 i96_cols.add(f.name)
-    cols = ["general" if _needs_general(f.type) else
-            None if (pa.types.is_struct(f.type) or
-                     pa.types.is_map(f.type)) else _map_type(f)
+    # None: a list / map / struct column, shredded leaf by leaf
+    cols = [None if pa.types.is_nested(f.type) else _map_type(f)
             for f in table.schema]
     if int96_timestamps:
         for c in cols:
-            if isinstance(c, _Col) and c.name in i96_cols:
+            if c is not None and c.name in i96_cols:
                 c.int96 = True
 
     if (row_group_bytes or page_bytes) and table.num_rows:
@@ -1817,23 +1577,24 @@ def write_table(table: pa.Table, path: str, compression: str = "snappy",
                     and not encryption.plaintext_footer) else MAGIC)
     all_chunks: list = []
     n = table.num_rows
-    col_optional = {c.name: False for c in cols
-                    if c is not None and c != "general"}
+    col_optional = {c.name: False for c in cols if c is not None}
     # column-level nulliness decided ONCE for the whole table so every
     # row group of a with-nulls column writes def streams
     col_has_nulls = {
         f.name: table.column(i).null_count > 0
         for i, (c, f) in enumerate(zip(cols, table.schema))
-        if isinstance(c, _Col) and c.elem is None}
-    def _chunk_crypto(name, path, rgi, ci):
-        """-> (_PageCrypt, crypto tuple) for one chunk, or (None, None)."""
+        if c is not None}
+    ptf = encryption is not None and encryption.plaintext_footer
+
+    def _chunk_crypto(path, rgi, ci):
+        """-> (_PageCrypt, crypto tuple) for one leaf chunk, or (None,
+        None). The column key resolves by dotted leaf path, then by
+        the top-level column name (one key for every leaf of it)."""
         if encryption is None:
             return None, None
-        if name in encryption.column_keys or \
-                ".".join(path) in encryption.column_keys:
-        
-            ckey = encryption.column_keys.get(
-                name, encryption.column_keys.get(".".join(path)))
+        ckey = encryption.column_keys.get(
+            ".".join(path), encryption.column_keys.get(path[0]))
+        if ckey is not None:
             key, kmd = ckey
             return (_PageCrypt(key, encryption.aad_base, rgi, ci,
                                encryption.ctr),
@@ -1858,62 +1619,25 @@ def write_table(table: pa.Table, path: str, compression: str = "snappy",
             field = table.schema.field(i)
             col_stats = stats and field.name not in stats_omit
             cid = col_codec_ids.get(field.name, codec_id)
-            if col == "general":
+            if col is None:
                 gchunks, u = _write_general_chunks(
                     out, field, arr, cid, page_rows, encodings,
                     col_stats, page_version, _chunk_crypto, rgi,
-                    len(chunks), want_pidx)
+                    len(chunks), want_pidx, bloom_columns or (),
+                    bloom_sizes or {})
                 for ch in gchunks:
-                    ch.ptf = (encryption is not None
-                              and encryption.plaintext_footer)
-                    chunks.append(ch)
+                    ch.ptf = ptf
+                chunks += gchunks
                 rg_u += u
                 continue
-            if col is None and pa.types.is_map(field.type):
-                mchunks, u = _write_map_chunks(
-                    out, field, arr, cid, page_rows, encodings,
-                    col_stats, page_version, _chunk_crypto, rgi,
-                    len(chunks), want_pidx)
-                for ch in mchunks:
-                    ch.ptf = (encryption is not None
-                              and encryption.plaintext_footer)
-                    chunks.append(ch)
-                rg_u += u
-                continue
-            if col is None:                       # STRUCT: shredded leaves
-                specs: list = []
-                _shred_struct(arr, field, [field.name],
-                              np.zeros(len(arr), np.uint8),
-                              np.ones(len(arr), bool), 0, specs)
-                for lpath, leaf_field, defs, leaf_vals, md in specs:
-                    lcol = _map_type(
-                        pa.field(lpath[-1], leaf_field.type, True))
-                    pc, crypto = _chunk_crypto(
-                        ".".join(lpath), lpath, rgi, len(chunks))
-                    chunk, u, _ = _write_chunk(
-                        out, lcol, leaf_vals, cid, page_rows,
-                        encodings.get(".".join(lpath), "auto"),
-                        col_stats, levels=(defs, md, lpath),
-                        page_version=page_version, pc=pc,
-                        want_pidx=want_pidx)
-                    chunk.crypto = crypto
-                    chunk.ptf = (encryption is not None
-                                 and encryption.plaintext_footer)
-                    chunks.append(chunk)
-                    rg_u += u
-                continue
-            pc, crypto = _chunk_crypto(col.name, [col.name] if
-                                       col.elem is None else
-                                       [col.name, "list", col.elem_name],
-                                       rgi, len(chunks))
+            pc, crypto = _chunk_crypto([col.name], rgi, len(chunks))
             chunk, u, opt = _write_chunk(
                 out, col, arr, cid, page_rows,
                 encodings.get(col.name, "auto"), col_stats,
                 page_version=page_version, pc=pc, want_pidx=want_pidx,
-                force_optional=col_has_nulls.get(col.name, False))
+                force_optional=col_has_nulls[col.name])
             chunk.crypto = crypto
-            chunk.ptf = (encryption is not None
-                         and encryption.plaintext_footer)
+            chunk.ptf = ptf
             if bloom_columns and col.name in bloom_columns:
                 chunk.bloom_hashes = _bloom_hashes(col, arr)
                 chunk.bloom_size = (bloom_sizes or {}).get(col.name)
@@ -1970,13 +1694,11 @@ def write_table(table: pa.Table, path: str, compression: str = "snappy",
     schema_elems = [_tstruct([(4, CT_BINARY, "schema"),
                               (5, CT_I32, len(cols))])]
     for col, field in zip(cols, table.schema):
-        if col == "general":
+        if col is None:
             _emit_schema_general(field, field.name, schema_elems)
-            continue
-        declared = (field.nullable and col_optional.get(col.name, True)
-                    if col is not None and col.elem is None
-                    else field.nullable)
-        _emit_schema_field(field, col, schema_elems, declared)
+        else:
+            schema_elems.append(_leaf_schema_elem(
+                col, field.name, field.nullable and col_optional[col.name]))
 
     # ColumnOrder TYPE_ORDER per leaf: without FileMetaData.column_orders
     # readers must ignore min_value/max_value (parquet.thrift §ColumnOrder)

@@ -193,6 +193,11 @@ def _leaf_type(t: dict[str, str]) -> tuple[pa.DataType, str | None]:
     raise ValueError(f"unsupported physical type {ptype!r}")
 
 
+# per-column writer options (_collect_options)
+_WRITER_TAGS = ("encoding", "compression", "omitstats", "bloomfilter",
+                "bloomfiltersize")
+
+
 def _collect_options(name: str, t: dict[str, str],
                      decl: SchemaDecl) -> None:
     enc = t.get("encoding", "").upper()
@@ -249,6 +254,14 @@ def _field_of(item: dict, decl: SchemaDecl, top: bool) -> pa.Field:
             decl.logical_types[name] = logical
     if top:
         _collect_options(name, t, decl)
+    else:
+        # the writer keys these options by top-level column: on a LIST
+        # element, MAP key/value or struct member they would vanish
+        tag = next((k for k in _WRITER_TAGS if t.get(k)), None)
+        if tag is not None:
+            raise ValueError(
+                f"field {name!r}: tag {tag}= is only honoured on a "
+                "top-level column, not on a nested field")
     return pa.field(name, typ, nullable)
 
 

@@ -98,6 +98,46 @@ def test_engine_roundtrip_column_keys_and_aad(tmp_path):
         P.decode_table(f)          # no keys supplied
 
 
+def _nested_tbl(n=1200):
+    return pa.table({
+        "x": pa.array(np.arange(n, dtype=np.int64)),
+        "st": pa.array([None if i % 7 == 0 else
+                        {"a": i, "b": None if i % 3 == 0 else f"b{i}"}
+                        for i in range(n)],
+                       pa.struct([("a", pa.int64()), ("b", pa.string())])),
+        "m": pa.array([None if i % 5 == 0 else
+                       [(f"k{j}", i + j) for j in range(i % 3)]
+                       for i in range(n)], pa.map_(pa.string(), pa.int64())),
+        "ll": pa.array([None if i % 11 == 0 else
+                        [list(range(j)) for j in range(i % 3)]
+                        for i in range(n)], pa.list_(pa.list_(pa.int32()))),
+        "e": pa.array([[float(j) for j in range(i % 4)] for i in range(n)],
+                      pa.list_(pa.float32())),
+    })
+
+
+@pytest.mark.parametrize("key_name", ["st", "m", "ll", "e", "st.b"])
+def test_column_keys_on_nested_columns(tmp_path, key_name):
+    """A column key named by a nested column seals every leaf of it (or,
+    by dotted leaf path, that one leaf): a reader holding only the
+    footer key cannot decode it, the keyed reader gets the input."""
+    from cryptography.exceptions import InvalidTag
+
+    tbl = _nested_tbl()
+    f = str(tmp_path / "n.parquet")
+    kf, kc = os.urandom(16), os.urandom(16)
+    W.write_table(tbl, f, row_group_rows=500, page_rows=200,
+                  encryption=C.Encrypt(footer_key=kf,
+                                       column_keys={key_name: (kc, b"")}))
+    top = key_name.split(".")[0]
+    with pytest.raises(InvalidTag):
+        P.decode_table(f, columns=[top],
+                       decryption=C.Decrypt(footer_key=kf))
+    got = P.decode_table(f, decryption=C.Decrypt(
+        footer_key=kf, column_keys={key_name: kc}))
+    assert got.to_pylist() == tbl.to_pylist()
+
+
 def test_pyarrow_decrypts_engine_file(tmp_path):
     """The external proof of the write side: pyarrow's C++ decryptor
     accepts engine ciphertext (modules, AADs, footer layout).

@@ -4,10 +4,11 @@ General Dremel: the writer shreds any arrow type tree (lists / maps /
 structs composed freely) into per-leaf rep/def streams with a
 vectorized recursive walk (the reference's reflection marshal,
 /root/reference/marshal/marshal.go:53-375, re-expressed over arrow);
-the reader reassembles records row-wise over the level-annotated
-SchemaElement tree (the reference's unmarshal posture). External
-referees: pyarrow + DuckDB + Spark read engine-written nested files;
-the engine reads pyarrow-written ones.
+the reader reassembles records over the level-annotated SchemaElement
+tree with the same vectorized walk in reverse (one path for every
+list, map and struct column). External referees: pyarrow + DuckDB +
+Spark read engine-written nested files; the engine reads
+pyarrow-written ones.
 """
 
 from __future__ import annotations
@@ -183,6 +184,53 @@ def test_struct_of_struct_with_list(tmp_path):
         t.column("s").to_pylist()
 
 
+def test_required_struct_of_required_leaves(tmp_path):
+    """max_def 0 leaves under a required struct carry no definition
+    levels at all (no level stream, no histograms)."""
+    typ = pa.struct([pa.field("a", pa.int32(), False),
+                     pa.field("b", pa.string(), False)])
+    t = pa.table({"s": pa.array([{"a": i, "b": f"b{i}"}
+                                 for i in range(500)], typ)},
+                 schema=pa.schema([pa.field("s", typ, False)]))
+    p = str(tmp_path / "req.parquet")
+    pqwriter.write_table(t, p, page_rows=100)
+    assert pq.read_table(p).to_pylist() == t.to_pylist()
+    assert P.decode_table(p).to_pylist() == t.to_pylist()
+
+
+def test_assembly_frees_level_streams(tmp_path):
+    """The decoded rep/def streams of a row group are garbage as soon
+    as its column is assembled: with the cycle collector off, memory
+    kept after decoding is about the result, not one stream set per
+    row group."""
+    import gc
+    import tracemalloc
+
+    rng = np.random.default_rng(4)
+    n, groups = 2000, 6
+    lens = rng.integers(20, 60, n * groups)
+    offs = np.zeros(len(lens) + 1, np.int32)
+    np.cumsum(lens, out=offs[1:])
+    t = pa.table({"tokens": pa.ListArray.from_arrays(
+        pa.array(offs), pa.array(rng.integers(0, 9, int(offs[-1]))
+                                 .astype(np.int32)))})
+    p = str(tmp_path / "tok.parquet")
+    pqwriter.write_table(t, p, row_group_rows=n)
+    P.decode_table(p)                       # warm imports and caches
+    gc.collect()
+    gc.disable()
+    tracemalloc.start()
+    try:
+        got = P.decode_table(p)
+        kept, _ = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+        gc.enable()
+    assert got.column("tokens").to_pylist() == t.column("tokens").to_pylist()
+    # levels are int64 per entry: a leak keeps >= 16 bytes per entry
+    assert kept < 2 * got.nbytes + (1 << 20), (kept, got.nbytes)
+
+
 def _rand_type(rng, depth):
     prims = [pa.int64(), pa.int32(), pa.float64(), pa.string(),
              pa.bool_()]
@@ -253,6 +301,73 @@ def test_random_nested_roundtrip(tmp_path):
         assert got_own == want, f"trial {trial}: self mismatch"
 
 
+@pytest.mark.parametrize("compliant", [True, False])
+def test_random_nested_pyarrow_written(tmp_path, compliant):
+    """The other direction: random deep-nested tables written by
+    pyarrow (compliant and legacy nested naming, several row groups,
+    small pages) decode through the engine in full and with random
+    per-row-group ``row_ranges``."""
+    for trial in range(12):
+        rng = np.random.default_rng(900 + trial + 50 * compliant)
+        typ = _rand_type(rng, 3)
+        while not pa.types.is_nested(typ):
+            typ = _rand_type(rng, 3)
+        n = int(rng.integers(1, 400))
+        vals = [_rand_value(rng, typ) if rng.random() > 0.1 else None
+                for _ in range(n)]
+        t = pa.table({"c": pa.array(vals, typ)})
+        p = str(tmp_path / f"pa{trial}.parquet")
+        rg_rows = int(rng.integers(20, 200))
+        pq.write_table(t, p, row_group_size=rg_rows,
+                       data_page_size=int(rng.integers(64, 2048)),
+                       use_compliant_nested_type=compliant,
+                       compression=str(rng.choice(["none", "zstd"])))
+        want = [_canon(v) for v in t.column("c").to_pylist()]
+        got = [_canon(v) for v in P.decode_table(p).column("c").to_pylist()]
+        assert got == want, f"trial {trial}: full decode mismatch"
+        ranges, keep = {}, []
+        for gi, lo in enumerate(range(0, n, rg_rows)):
+            m = min(rg_rows, n - lo)
+            cuts = np.sort(rng.integers(0, m + 1, 4))
+            ranges[gi] = [(int(a), int(b)) for a, b in
+                          ((cuts[0], cuts[1]), (cuts[2], cuts[3]))]
+            keep += [lo + i for a, b in ranges[gi] for i in range(a, b)]
+        got = P.decode_table(p, row_ranges=ranges).column("c").to_pylist()
+        assert [_canon(v) for v in got] == [want[i] for i in keep], \
+            f"trial {trial}: row_ranges mismatch"
+
+
+def test_logical_annotation_on_nested_leaves(tmp_path):
+    """A UUID list element and a UUID member of a struct that also
+    holds a list keep their annotation in the written schema."""
+    import uuid
+
+    u16 = pa.binary(16)
+    md = {b"pgs_logical": b"uuid"}
+    n = 300
+    t = pa.table({
+        "ul": pa.array([[uuid.UUID(int=7 * i + j).bytes
+                         for j in range(i % 3)] for i in range(n)],
+                       pa.list_(pa.field("element", u16, metadata=md))),
+        "s": pa.array([None if i % 9 == 0 else
+                       {"id": uuid.UUID(int=i).bytes, "l": [i] * (i % 2)}
+                       for i in range(n)],
+                      pa.struct([pa.field("id", u16, metadata=md),
+                                 pa.field("l", pa.list_(pa.int32()))])),
+    })
+    p = str(tmp_path / "uuid.parquet")
+    pqwriter.write_table(t, p, page_rows=100)
+    sch = pq.ParquetFile(p).schema
+    logical = {sch.column(i).path: sch.column(i).logical_type.type
+               for i in range(len(sch))}
+    assert logical["ul.list.element"] == "UUID"
+    assert logical["s.id"] == "UUID"
+    back = P.decode_table(p)
+    assert back.to_pylist() == t.to_pylist()
+    assert back.schema.field("s").type.field("id").metadata == md
+    assert pq.read_table(p).to_pylist() == t.to_pylist()
+
+
 def test_spark_reads_engine_nested(spark, written):
     path, t = written
     df = spark.read.parquet(path)
@@ -263,37 +378,3 @@ def test_spark_reads_engine_nested(spark, written):
              None if r["sl"] is None else r["sl"]["x"])
             for r in t.to_pylist()]
     assert [(r["id"], r["nl"], r["x"]) for r in got] == want
-
-
-def test_fast_lanes_match_general(written):
-    """list<struct> and list<list> ride vectorized lanes in
-    decode_table; they must agree exactly with the general record
-    assembly (and both with pyarrow, covered above)."""
-    path, t = written
-    meta = P.read_footer(path)
-    groups = P.column_chunks(meta)
-    full = P.decode_table(path)
-    for col in ("ll", "ls"):
-        f = full.schema.field(col)
-        gen = P._assemble_general(path, groups[0], f).cast(f.type)
-        assert gen.to_pylist() == full.column(col).to_pylist(), col
-
-
-def test_fast_lane_speedup(written):
-    """The vectorized lanes must actually be faster than the row-wise
-    general assembly on the same chunk (sanity, not a benchmark)."""
-    import time
-
-    path, t = written
-    meta = P.read_footer(path)
-    groups = P.column_chunks(meta)
-    f = P.arrow_schema(meta).field("ll")
-    tree = P._top_tree(meta, "ll")
-    t0 = time.time()
-    for _ in range(3):
-        P._assemble_list_list(path, groups[0], f, tree)
-    fast = time.time() - t0
-    t0 = time.time()
-    P._assemble_general(path, groups[0], f)
-    gen = time.time() - t0
-    assert fast / 3 < gen, (fast / 3, gen)

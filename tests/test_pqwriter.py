@@ -486,6 +486,32 @@ def test_reader_prunes_row_groups(spark, tmp_path):
         spark, d, filters={"tag": ("eq", "nope-1")}).count() == 0
 
 
+def test_bloom_prune_value_outside_physical_range(spark, tmp_path):
+    """An eq probe that no INT32 value can equal (2**40) prunes the row
+    group instead of failing to encode the probe; no stats, so the
+    bloom is the only pruning layer."""
+    import os
+
+    from parquet_go_spark.operators import parquet_sink as S
+
+    n = 5000
+    tbl = pa.table({"k": pa.array(np.arange(n, dtype=np.int32)),
+                    "u": pa.array(np.arange(n, dtype=np.int64))})
+    d = str(tmp_path / "ovf")
+    os.makedirs(d)
+    f = os.path.join(d, "p.parquet")
+    W.write_table(tbl, f, bloom_columns=["k"], stats_omit=["k"])
+    meta = P.read_footer(f)
+    assert not S._rg_bloom_keep(f, meta, 0, "k", ("eq", 2**40))
+    assert not S._rg_bloom_keep(f, meta, 0, "k", ("eq", -2**31 - 1))
+    assert S._rg_bloom_keep(f, meta, 0, "k", ("eq", 17))
+    assert S._rg_bloom_keep(f, meta, 0, "k", ("in", [2**40, 17]))
+    assert S.read_parquet_dir(
+        spark, d, filters={"k": ("eq", 2**40)}).count() == 0
+    assert S.read_parquet_dir(
+        spark, d, filters={"k": ("eq", 17)}).count() == 1
+
+
 def test_migration_verbs_roundtrip(spark, tmp_path):
     """parquet -> PGS store (engine decode + pgs write) and back out to
     parquet (pgs read + engine write): both rides, values exact."""

@@ -153,6 +153,34 @@ def test_declaration_errors():
         parse_csv_metadata(["name=x, type=INT32, convertedtype=DECIMAL"])
 
 
+@pytest.mark.parametrize("tag", [
+    "encoding=PLAIN", "compression=ZSTD", "bloomfilter=true",
+    "omitstats=true", "bloomfiltersize=1024"])
+@pytest.mark.parametrize("shape", ["list", "map_key", "map_value",
+                                   "struct"])
+def test_writer_tags_on_nested_fields_raise(shape, tag):
+    """Writer options are keyed by top-level column; on a nested field
+    they would be dropped, so the declaration refuses them by name."""
+    leaf = f'"name=inner, type=INT64, {tag}"'
+    plain = '"name=other, type=INT64"'
+    fields = {
+        "list": f'"name=c, type=LIST", "Fields": [{{"Tag": {leaf}}}]',
+        "map_key": (f'"name=c, type=MAP", "Fields": [{{"Tag": {leaf}}}, '
+                    f'{{"Tag": {plain}}}]'),
+        "map_value": (f'"name=c, type=MAP", "Fields": [{{"Tag": {plain}}}, '
+                      f'{{"Tag": {leaf}}}]'),
+        "struct": (f'"name=c", "Fields": [{{"Tag": {plain}}}, '
+                   f'{{"Tag": {leaf}}}]'),
+    }[shape]
+    doc = '{"Tag": "name=r", "Fields": [{"Tag": ' + fields + '}]}'
+    with pytest.raises(ValueError,
+                       match=f"'inner'.*{tag.split('=')[0]}="):
+        parse_json_schema(doc)
+    # the same tag on the top-level column is honoured
+    parse_json_schema(doc.replace(f", {tag}", "").replace(
+        '"name=c', f'"{tag}, name=c'))
+
+
 def test_legacy_repeated_leaf():
     decl = parse_csv_metadata(
         ["name=xs, type=INT64, repetitiontype=REPEATED"])
