@@ -1014,6 +1014,8 @@ def encode_chunk_paged(
              "vmin": st.get("min"), "vmax": st.get("max")}
         ]
         return blob, st
+    from .prune import order_key
+
     frames: list[bytes] = []
     pages: list[dict] = []
     chosen: str | int = codec
@@ -1042,9 +1044,6 @@ def encode_chunk_paged(
         # would un-pin NaN from a paged chunk's vmax and let a pushed
         # v > K filter prune a partition whose NaN rows match (Spark
         # treats NaN as greater than any number)
-        def _tkey(v):
-            return (1, 0.0) if isinstance(v, float) and v != v else (0, v)
-
         for key in ("min", "max"):
             v = fst.get(key)
             if v is None:
@@ -1052,9 +1051,11 @@ def encode_chunk_paged(
             if key not in agg:
                 agg[key] = v
             elif key == "min":
-                agg[key] = v if _tkey(v) < _tkey(agg[key]) else agg[key]
+                agg[key] = v if order_key(v) < order_key(agg[key]) \
+                    else agg[key]
             else:
-                agg[key] = v if _tkey(v) > _tkey(agg[key]) else agg[key]
+                agg[key] = v if order_key(v) > order_key(agg[key]) \
+                    else agg[key]
     header = PAGE_MAGIC + struct.pack("<I", len(frames))
     header += struct.pack(f"<{len(frames)}Q", *(len(f) for f in frames))
     blob = header + b"".join(frames)

@@ -330,166 +330,61 @@ FROM customer
 
 # -------------------------------------------------------- engine reader
 
-def _pred_storage_value(v, li):
-    """Predicate value -> the column's physical-storage comparable
-    (dates to epoch days, datetimes to the column's epoch unit,
-    strings to bytes) so pruning comparisons never mix types."""
-    import datetime
-    import decimal
-
-    if isinstance(v, str):
-        return v.encode()
-    if isinstance(v, decimal.Decimal):
-        logical = (li.leaf_el.get(10) or {})
-        dec = logical.get(5)
-        if dec is None and li.leaf_el.get(6) != 5:
-            return v                       # not a DECIMAL column
-        scale = (dec.get(1) if dec is not None else
-                 li.leaf_el.get(7, 0)) or 0
-        return int(v.scaleb(scale))        # unscaled storage integer
-    if isinstance(v, datetime.datetime):
-        logical = (li.leaf_el.get(10) or {})
-        ts = logical.get(8) or {}
-        unit = ts.get(2) or {}
-        us = int(v.timestamp() * 1_000_000) if v.tzinfo else int(
-            v.replace(tzinfo=datetime.timezone.utc).timestamp()
-            * 1_000_000)
-        if 1 in unit or li.leaf_el.get(6) == 9:      # millis
-            return us // 1000
-        if 3 in unit:                                 # nanos
-            return us * 1000
-        return us
-    if isinstance(v, datetime.date):
-        return (v - datetime.date(1970, 1, 1)).days
-    return v
+def _rg_bbox_keep(meta: dict, gi: int, col: str, pred: tuple) -> bool:
+    """GeospatialStatistics (ColumnMetaData 17; reference
+    internal/layout/chunk.go:124-173) pruning of one row group: drop the
+    unit only when the folded bbox PROVES no geometry intersects the
+    ``("bbox", xmin, ymin, xmax, ymax)`` window."""
+    bb = next((cc[3] for cc in meta[4][gi][1]
+               if b".".join(cc[3][3]).decode().split(".")[0] == col),
+              {}).get(17, {}).get(1)
+    if not bb:
+        return True
+    xmin, xmax = bb.get(1), bb.get(2)
+    ymin, ymax = bb.get(3), bb.get(4)
+    if None in (xmin, xmax, ymin, ymax):
+        return True
+    qx0, qy0, qx1, qy1 = pred[1:]
+    return not (xmax < qx0 or xmin > qx1
+                or ymax < qy0 or ymin > qy1)
 
 
-def _rg_stats_keep(meta: dict, gi: int, col: str, pred: tuple) -> bool:
-    """Row-group stats pruning (advisory-lossless): False only when the
-    chunk's min/max bounds PROVE no row can match."""
-    import struct as structmod
-
+def _rg_keep(path: str, chunks: list, filters: dict,
+             probe: bool = True) -> bool:
+    """May the row group whose column chunk infos are ``chunks`` (one
+    entry of ``column_chunks(meta)``, built once per file) hold a row
+    matching every Filter of ``filters`` (column -> Filters over storage
+    values)? Footer stats first; with ``probe``, point filters then read
+    the chunk's bloom once and, for a fully dictionary-encoded chunk,
+    its dictionary page. Every verdict is ``prune``'s."""
     from .. import pqinterop as P
+    from .. import prune
 
-    cc_md = None
-    for cc in meta[4][gi][1]:
-        if b".".join(cc[3][3]).decode().split(".")[0] == col:
-            cc_md = cc[3]
-            break
-    if pred[0] == "bbox":
-        # GeospatialStatistics (ColumnMetaData 17; reference
-        # internal/layout/chunk.go:124-173): drop the unit only when
-        # the folded bbox PROVES no geometry intersects the window
-        bb = (cc_md or {}).get(17, {}).get(1)
-        if not bb:
-            return True
-        xmin, xmax = bb.get(1), bb.get(2)
-        ymin, ymax = bb.get(3), bb.get(4)
-        if None in (xmin, xmax, ymin, ymax):
-            return True
-        qx0, qy0, qx1, qy1 = pred[1:]
-        return not (xmax < qx0 or xmin > qx1
-                    or ymax < qy0 or ymin > qy1)
-    if cc_md is None or 12 not in cc_md:
-        return True
-    st = cc_md[12]
-    mn_b, mx_b = st.get(6), st.get(5)
-    if mn_b is None or mx_b is None:
-        return True
-    li = next(x for x in P._walk_schema(meta)
-              if x.top_name == col or x.path == col)
-    uns = P._leaf_unsigned(li.leaf_el)
-    if li.ptype == P.T_INT32:
-        mn, mx = (structmod.unpack("<I" if uns else "<i", b)[0]
-                  for b in (mn_b, mx_b))
-    elif li.ptype == P.T_INT64:
-        mn, mx = (structmod.unpack("<Q" if uns else "<q", b)[0]
-                  for b in (mn_b, mx_b))
-    elif li.ptype == P.T_FLOAT:
-        mn, mx = (structmod.unpack("<f", b)[0] for b in (mn_b, mx_b))
-    elif li.ptype == P.T_DOUBLE:
-        mn, mx = (structmod.unpack("<d", b)[0] for b in (mn_b, mx_b))
-    elif li.ptype == P.T_BYTE_ARRAY:
-        mn, mx = mn_b, mx_b
-    else:
-        return True
-    op = pred[0]
-    if op == "eq":
-        v = _pred_storage_value(pred[1], li)
-        return mn <= v <= mx
-    if op == "in":
-        return any(mn <= _pred_storage_value(v, li) <= mx
-                   for v in pred[1])
-    if op == "range":
-        lo = _pred_storage_value(pred[1], li)
-        hi = _pred_storage_value(pred[2], li)
-        return not (hi < mn or lo > mx)
-    return True
-
-
-def _rg_bloom_keep(path: str, meta: dict, gi: int, col: str,
-                   pred: tuple) -> bool:
-    """Bloom pruning for eq predicates: False = definitely absent.
-    Bloom bytes arrive via a ranged read (never the whole file)."""
-    from .. import pqinterop as P
-
-    if pred[0] not in ("eq", "in"):
-        return True
-    for cc in P.column_chunks(meta)[gi]:
-        if cc.name == col or cc.top_name == col:
-            if cc.bloom_offset is None:
-                return True
-            if pred[0] == "in":
-                return any(
-                    _rg_bloom_keep(path, meta, gi, col, ("eq", v))
-                    for v in pred[1])
-            v = pred[1]
-            if isinstance(v, str):
-                b = v.encode()
-            elif isinstance(v, bytes):
-                b = v
-            elif isinstance(v, int) and cc.physical_type in (P.T_INT32,
-                                                              P.T_INT64):
-                try:
-                    b = int(v).to_bytes(
-                        4 if cc.physical_type == P.T_INT32 else 8,
-                        "little",
-                        signed=not P._leaf_unsigned(cc.leaf_el))
-                except OverflowError:
-                    return False    # outside the physical type's range
-            else:
-                return True
-            from .. import bloom as bloommod
-
-            h = bloommod.xxhash64_bytes([b])
-            return bool(P.read_bloom_at(path, cc).check_hashes(h)[0])
-    return True
-
-
-def _rg_dict_keep(path: str, meta: dict, gi: int, col: str,
-                  pred: tuple) -> bool:
-    """Dictionary pruning for eq predicates (parquet-mr's
-    DictionaryFilter re-expressed): when encoding_stats proves the
-    chunk is FULLY dictionary-encoded, one ranged read of the dict
-    page decides membership — definitely-absent drops the unit."""
-    from .. import pqinterop as P
-
-    if pred[0] not in ("eq", "in"):
-        return True
-    for cc in P.column_chunks(meta)[gi]:
-        if cc.name == col or cc.top_name == col:
-            if not P.chunk_fully_dict(cc):
-                return True
+    for col, flts in filters.items():
+        cc = next((c for c in chunks
+                   if c.name == col or c.top_name == col), None)
+        if cc is None or cc.key_missing:
+            continue
+        lo, hi, nulls = P.chunk_bounds(cc)
+        nan_in_bounds = cc.physical_type not in (P.T_FLOAT, P.T_DOUBLE)
+        if not all(prune.keep(f, lo, hi, nulls, cc.num_values,
+                              nan_in_bounds) for f in flts):
+            return False
+        points = [f for f in flts if prune.point_values(f)]
+        if not probe or not points:
+            continue
+        if cc.bloom_offset is not None:
+            bloom = P.read_bloom_at(path, cc)
+            for f in points:
+                hashes = P.bloom_hashes(cc, prune.point_values(f))
+                if hashes is not None and not prune.bloom_keep(bloom,
+                                                               hashes):
+                    return False
+        if P.chunk_fully_dict(cc):
             d = P.read_dictionary(path, cc)
-            if d is None:
-                return True
-            vals = pred[1] if pred[0] == "in" else [pred[1]]
-            vals = [v.encode() if isinstance(v, str) else v
-                    for v in vals]
-            if isinstance(d, np.ndarray):
-                return bool(np.isin(np.array(vals), d).any())
-            dset = set(d)
-            return any(v in dset for v in vals)
+            if d is not None and not all(prune.dict_keep(f, d)
+                                         for f in points):
+                return False
     return True
 
 
@@ -532,7 +427,7 @@ def read_parquet_dir(
     never touches the decode path; Spark only ferries the Arrow
     batches. Work units are enumerated from footers driver-side
     (metadata-scale, exactly what a FileSourceScan does)."""
-    from .. import pqinterop, pqsource
+    from .. import pqinterop, pqsource, prune
 
     if crc_mode not in (None, "auto", "strict", "ignore"):
         raise ValueError(f"unknown crc_mode {crc_mode!r}")
@@ -546,54 +441,37 @@ def read_parquet_dir(
 
     pool_n = min(16, max(4, (os.cpu_count() or 8) // 2))
     with ThreadPoolExecutor(pool_n) as ex:
-        metas = dict(zip(files, ex.map(
-            lambda f: pqinterop.read_footer(f, decryption), files)))
-    schemas = {f: pqinterop.arrow_schema(m) for f, m in metas.items()}
-    sfilters = {}         # storage-typed predicate values (dates ->
-                          # epoch days, datetimes -> the column's unit,
-                          # strings -> bytes) for EVERY pruning layer;
-                          # the exact Spark re-apply keeps the originals
+        footers = dict(zip(files, ex.map(
+            lambda f: pqinterop.read_footer_ex(f, decryption), files)))
+    schemas = {f: pqinterop.arrow_schema(m)
+               for f, (m, _) in footers.items()}
+    # bbox windows prune on the footer bboxes; every other predicate
+    # becomes Filters over storage values (dates -> epoch days,
+    # datetimes -> the column's unit, Decimals -> unscaled ints, strings
+    # -> bytes) once, here; the exact Spark re-apply keeps the originals
     walk = {x.top_name: x
-            for x in pqinterop._walk_schema(metas[files[0]])}
-    for col, pred in (filters or {}).items():
-        li = walk.get(col)
-        if li is None or pred[0] == "bbox":
-            sfilters[col] = pred      # bbox carries raw window coords
-        elif pred[0] == "in":
-            sfilters[col] = ("in", [
-                _pred_storage_value(v, li) for v in pred[1]])
-        elif pred[0] == "range":
-            sfilters[col] = ("range",
-                             _pred_storage_value(pred[1], li),
-                             _pred_storage_value(pred[2], li))
-        else:
-            sfilters[col] = (pred[0],
-                             _pred_storage_value(pred[1], li))
+            for x in pqinterop._walk_schema(footers[files[0]][0])}
+    bboxes = {c: p for c, p in (filters or {}).items() if p[0] == "bbox"}
+    zfilters = {
+        c: [pqinterop.storage_filter(f, walk[c].leaf_el)
+            for f in prune.from_tuple(c, p)]
+        for c, p in (filters or {}).items()
+        if p[0] != "bbox" and c in walk}
 
     def _file_units(f):
-        meta = metas[f]
-        out = []
-        for g in range(len(meta[4])):
-            keep = True
-            for col, pred in sfilters.items():
-                keep = (keep and _rg_stats_keep(meta, g, col, pred)
-                        and (decryption is not None
-                             or (_rg_bloom_keep(f, meta, g, col, pred)
-                                 and _rg_dict_keep(f, meta, g, col,
-                                                   pred))))
-            if keep:
-                out.append((f, g))
-        return out
+        meta, ctx = footers[f]
+        groups = pqinterop.column_chunks(meta, ctx) if zfilters else None
+        return [
+            (f, g) for g in range(len(meta[4]))
+            if all(_rg_bbox_keep(meta, g, c, p) for c, p in bboxes.items())
+            and (groups is None or _rg_keep(f, groups[g], zfilters,
+                                            probe=decryption is None))
+        ]
 
     units = []
-    if sfilters:
-        # bloom/dict pruning reads pages — also independent per file
-        with ThreadPoolExecutor(pool_n) as ex:
-            for us in ex.map(_file_units, files):
-                units.extend(us)
-    else:
-        for f in files:
-            units.extend(_file_units(f))
+    with ThreadPoolExecutor(pool_n) as ex:   # bloom/dict reads per file
+        for us in ex.map(_file_units, files):
+            units.extend(us)
     uniform = all(s.equals(schemas[files[0]]) for s in schemas.values())
     schema = (schemas[files[0]] if uniform
               else _unify_schemas(list(schemas.values())))
@@ -638,10 +516,10 @@ def read_parquet_dir(
                 # footer-only): ColumnIndex bounds -> rg-local row
                 # ranges; pruned pages are never read off disk
                 ranges = None
-                if filters and decryption is None:
+                if zfilters and decryption is None:
                     meta = P.read_footer(f)
-                    r, pruned = P.predicate_row_ranges(
-                        f, meta, g, sfilters)
+                    r, pruned = P.page_row_ranges(
+                        f, P.column_chunks(meta)[g], zfilters)
                     if pruned:
                         if not r:
                             continue
@@ -666,11 +544,11 @@ def read_parquet_dir(
                         else pa.nulls(tbl.num_rows, fl.type)
                         for fl in schema]
                     tbl = pa.table(arrays, schema=schema)
-                for fc, fp in (sfilters or {}).items():
+                for fc, fp in bboxes.items():
                     # bbox is applied EXACTLY here, task-side (footer
                     # pruning above is advisory): vectorized WKB
                     # window test, so no Spark re-apply is needed
-                    if fp[0] == "bbox" and fc in tbl.column_names:
+                    if fc in tbl.column_names:
                         from .. import geo as geomod
 
                         m = geomod.bbox_mask(

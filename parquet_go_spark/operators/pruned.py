@@ -7,15 +7,17 @@ our blob store:
     (reader/reader.go:126-138 per-leaf buffers; here: a `col IN (...)`
     filter that parquet pushes down, so pruned partitions' blob bytes are
     never fetched).
-  * stats pruning       — partition [vmin, vmax] vs a range predicate
-    (the ColumnIndex consumed by SkipRows,
-    reader/columnbuffer_offset_index.go:23-110). Useful when the write was
-    range-clustered on the key — same as the reference recording
-    boundary-order ASC for sorted writes (writer/pages.go:198-246).
-  * bloom pruning       — split-block bloom membership per chunk
-    (reader/bloom.go:61-126 BloomFilterCheck). Useful when stats are wide
-    (hash-clustered key): no false negatives, so pruned-decode + exact
-    post-filter is exact.
+  * partition pruning   — the gate queries hand Spark Filters to the
+    format("pgs") source's own planner, ``_candidate_parts``: every filter
+    consults each chunk's [vmin, vmax] and null counts (the ColumnIndex
+    consumed by SkipRows, reader/columnbuffer_offset_index.go:23-110), and
+    point filters then probe the chunks' split-block blooms
+    (reader/bloom.go:61-126 BloomFilterCheck). Both are one-sided
+    (``prune.keep``), so pruned-decode + exact post-filter is exact on any
+    clustering; range clustering makes the bounds tight, blooms serve
+    hash-clustered keys.
+  * page pruning        — ``page_candidates``, per-page bounds of the
+    surviving partitions.
 
 Mechanics note: candidate part_ids are collected on the driver — that is
 the manifest (footer) read, bounded by partition count, never row count —
@@ -29,12 +31,17 @@ from __future__ import annotations
 import os
 import shutil
 
-import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.datasource import (
+    EqualTo,
+    GreaterThanOrEqual,
+    In,
+    LessThanOrEqual,
+)
 
-from .. import bloom as bloommod
+from ..sources.pgs_datasource import _candidate_parts
 from .decode_job import make_decode_fn
 from .encode_job import encode_blobs_df
 from .store import ManifestStore
@@ -226,33 +233,6 @@ def _decode_parts(
     )
 
 
-def stats_candidates(
-    spark: SparkSession, store: ManifestStore, key_col: str,
-    lo, hi,
-) -> list[int]:
-    """Manifest (footer) read: partitions whose [vmin, vmax] intersects.
-
-    Numeric bounds compare as double; string bounds compare
-    lexicographically — valid against the truncated manifest bounds
-    because truncation only ever widens the interval (stats_trunc.py:
-    min is a prefix, max rounds up)."""
-    meta = store.manifest(spark).filter(F.col("col") == key_col)
-    if isinstance(lo, str) or isinstance(hi, str):
-        vmin, vmax = F.col("vmin"), F.col("vmax")
-    else:
-        # try_cast: an absent bound ("" — empty or all-null chunk) must
-        # yield NULL, not an ANSI cast error. NULL makes the keep
-        # predicate NULL -> pruned, which is correct: a chunk with no
-        # values has no row a range predicate can match (NULL rows fail
-        # every comparison). NaN bounds parse ('nan') and compare with
-        # Spark's NaN-greatest order, matching how the chunk stats were
-        # folded (total order, chunk.py float stats).
-        vmin = F.expr("try_cast(vmin as double)")
-        vmax = F.expr("try_cast(vmax as double)")
-    keep = meta.filter(~((vmax < F.lit(lo)) | (vmin > F.lit(hi))))
-    return [r["part_id"] for r in keep.select("part_id").collect()]
-
-
 def page_candidates(
     spark: SparkSession, store: ManifestStore, key_col: str, lo, hi,
     part_ids: list[int] | None = None,
@@ -347,96 +327,6 @@ def _decode_parts_pages(
     )
 
 
-def auto_candidates(
-    spark: SparkSession, store: ManifestStore, key_col: str,
-    lo=None, hi=None, keys: list | None = None,
-) -> list[int]:
-    """Strategy selection from the STORE's own recorded layout metadata
-    (clustering + declared sort + bloom columns, writer/sorting.go:9-48
-    analog) — callers no longer say how the store was clustered:
-
-      * range predicate + range-clustered (or ASC boundary order) -> stats
-      * point keys + a recorded bloom on the key -> bloom
-      * otherwise -> no pruning (all partitions), still exact
-    """
-    meta = store.meta()
-    clustered_on = meta.get("key_col")
-    clustering = meta.get("clustering", "")
-    has_bloom = key_col in (meta.get("bloom_cols") or [])
-    if keys is not None and has_bloom:
-        return bloom_candidates(spark, store, key_col, keys)
-    if lo is not None and hi is not None:
-        range_clustered = clustered_on == key_col and clustering.startswith(
-            "range"
-        )
-        if not range_clustered and clustering == "zorder":
-            # Morton locality bounds every zorder column, not just the
-            # primary key — stats prune on any of them
-            range_clustered = key_col in (meta.get("zorder_cols") or [])
-        if not range_clustered:
-            # fall back to the manifest itself: ASC/DESC boundary order
-            # on every chunk of this column means stats prune losslessly
-            orders = {
-                r["boundary_order"]
-                for r in store.manifest(spark)
-                .filter(F.col("col") == key_col)
-                .select("boundary_order")
-                .distinct()
-                .collect()
-            }
-            range_clustered = orders <= {"ASC", "DESC"} and bool(orders)
-        if range_clustered:
-            return stats_candidates(spark, store, key_col, lo, hi)
-        if keys is None and has_bloom:
-            pass  # range over a bloom store: stats are wide, no pruning
-    if keys is not None:
-        # no bloom recorded: stats may still help for tight key sets
-        return stats_candidates(spark, store, key_col, min(keys), max(keys))
-    return [
-        r["part_id"] for r in store.completed_partitions(spark).collect()
-    ]
-
-
-def bloom_candidates(
-    spark: SparkSession, store: ManifestStore, key_col: str, keys: list,
-) -> list[int]:
-    """Probe each chunk's bloom with all keys; keep chunks with any hit.
-    The probe runs distributed (mapInArrow over manifest rows) — at scale
-    the manifest itself is a big table; only hit part_ids reach the driver."""
-    if isinstance(keys[0], (int, np.integer)):
-        hashes = bloommod.xxhash64_u64(np.asarray(keys, dtype=np.int64))
-    else:
-        hashes = bloommod.xxhash64_bytes(
-            [k.encode() if isinstance(k, str) else k for k in keys]
-        )
-
-    def probe(batches):
-        for b in batches:
-            pids = b.column("part_id").to_pylist()
-            hits = []
-            for blm in b.column("bloom").to_pylist():
-                if blm is None:
-                    hits.append(True)  # no filter -> cannot prune
-                else:
-                    bf = bloommod.SplitBlockBloom.frombytes(blm)
-                    hits.append(bool(bf.check_hashes(hashes).any()))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(pids, pa.int32()), pa.array(hits, pa.bool_())],
-                names=["part_id", "hit"],
-            )
-
-    meta = (
-        store.blobs(spark)
-        .filter(F.col("col") == key_col)
-        .select("part_id", "bloom")
-    )
-    hit_df = meta.mapInArrow(probe, "part_id int, hit boolean")
-    return [
-        r["part_id"]
-        for r in hit_df.filter(F.col("hit")).select("part_id").collect()
-    ]
-
-
 # ------------------------------------------------------------ driver queries
 
 RANGE_LO, RANGE_HI = 1_000, 20_000
@@ -445,6 +335,11 @@ POINT_KEYS = [7, 13, 42, 101, 999]
 
 def _orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/orders.parquet")
+
+
+def _between(col: str, lo, hi) -> list:
+    """``lo <= col <= hi`` as the Filters ``_candidate_parts`` takes."""
+    return [GreaterThanOrEqual((col,), lo), LessThanOrEqual((col,), hi)]
 
 
 def stats_pruned_range_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -457,9 +352,8 @@ def stats_pruned_range_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = encode_generic(
         spark, df, out, key_col="o_orderkey", clustering="range"
     )
-    # strategy comes from the store's recorded layout metadata, not the
-    # caller: auto_candidates sees clustering=range on this key
-    cand = auto_candidates(spark, store, "o_orderkey", RANGE_LO, RANGE_HI)
+    cand = _candidate_parts(store.out_dir, _between("o_orderkey", RANGE_LO,
+                                                    RANGE_HI))
     dec = _decode_parts(spark, store, cand, cols, schema, atypes)
     return dec.filter(
         (F.col("o_orderkey") >= RANGE_LO) & (F.col("o_orderkey") <= RANGE_HI)
@@ -477,8 +371,8 @@ def bloom_pruned_point_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, df, out, key_col="o_custkey", clustering="hash",
         bloom_cols={"o_custkey"},
     )
-    # auto_candidates reads the recorded bloom_cols and routes to blooms
-    cand = auto_candidates(spark, store, "o_custkey", keys=POINT_KEYS)
+    cand = _candidate_parts(store.out_dir,
+                            [In(("o_custkey",), tuple(POINT_KEYS))])
     dec = _decode_parts(spark, store, cand, cols, schema, atypes)
     return dec.filter(F.col("o_custkey").isin(POINT_KEYS))
 
@@ -504,7 +398,8 @@ def token_membership_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, df, out, key_col="doc_id", clustering="hash",
         bloom_cols={"words"},
     )
-    cand = auto_candidates(spark, store, "words", keys=[MEMBER_WORD])
+    cand = _candidate_parts(store.out_dir,
+                            [EqualTo(("words",), MEMBER_WORD)])
     dec = _decode_parts(spark, store, cand, cols, schema, atypes)
     return dec.filter(
         F.array_contains("words", MEMBER_WORD)
@@ -531,7 +426,8 @@ def page_pruned_range_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, df, out, key_col="o_orderkey", clustering="range",
         num_parts=4, page_rows=512, sort_within=True,
     )
-    cand = auto_candidates(spark, store, "o_orderkey", RANGE_LO, RANGE_HI)
+    cand = _candidate_parts(store.out_dir, _between("o_orderkey", RANGE_LO,
+                                                    RANGE_HI))
     pmap = page_candidates(
         spark, store, "o_orderkey", RANGE_LO, RANGE_HI, cand
     )
@@ -554,9 +450,10 @@ def zorder_pruned_box_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, df, out, key_col="o_orderkey", clustering="zorder",
         zorder_cols=["o_orderkey", "o_custkey"], num_parts=32,
     )
-    ca = auto_candidates(spark, store, "o_orderkey", ZBOX_KEY_LO, ZBOX_KEY_HI)
-    cb = auto_candidates(spark, store, "o_custkey", ZBOX_CUST_LO, ZBOX_CUST_HI)
-    cand = sorted(set(ca) & set(cb))
+    cand = _candidate_parts(
+        store.out_dir,
+        _between("o_orderkey", ZBOX_KEY_LO, ZBOX_KEY_HI)
+        + _between("o_custkey", ZBOX_CUST_LO, ZBOX_CUST_HI))
     dec = _decode_parts(spark, store, cand, cols, schema, atypes)
     return dec.filter(
         (F.col("o_orderkey") >= ZBOX_KEY_LO)

@@ -195,6 +195,7 @@ class ColumnChunkInfo:
     ci_len: int | None = None
     data_page_offset: int = 0         # ColumnMetaData field 9
     enc_stats: list | None = None     # ColumnMetaData.encoding_stats
+    stats: dict | None = None         # ColumnMetaData.statistics
     leaf_el: dict | None = None       # SchemaElement of the leaf
     crc_mode: str | None = None       # per-read override of CRC_MODE
 
@@ -409,18 +410,35 @@ def column_chunks(meta: dict, ctx=None,
                 elif 2 in ccrypt:           # ENCRYPTION_WITH_COLUMN_KEY
                     # by dotted leaf path, then by top-level column
                     cpath = b".".join(ccrypt[2].get(1, [])).decode()
-                    enc_key = dec.resolve(
-                        ccrypt[2].get(2),
-                        cpath if cpath in dec.column_keys
-                        else cpath.split(".")[0] or cpath)
+                    kname = (cpath if cpath in dec.column_keys
+                             else cpath.split(".")[0] or cpath)
+                    enc_key = dec.resolve(ccrypt[2].get(2), kname)
+                    # the footer key stands in only for a file sealed
+                    # with one key throughout; when it cannot open this
+                    # chunk, the reader lacks the column's key and only
+                    # a read of this column fails
+                    fallback = kname not in dec.column_keys and not (
+                        dec.key_retriever is not None and ccrypt[2].get(2))
                 else:                       # ENCRYPTION_WITH_FOOTER_KEY
                     enc_key = fkey
+                    fallback = False
                 if enc_key is not None and 3 not in cc and 9 in cc:
+                    from cryptography.exceptions import InvalidTag
+
                     aad = pqcrypt.module_aad(aad_base, pqcrypt.M_COLMETA,
                                              rgi, ci)
-                    pt, _ = pqcrypt.open_module(enc_key, aad, cc[9], 0)
-                    cc = dict(cc)
-                    cc[3], _ = _read_struct(memoryview(pt), 0)
+                    try:
+                        pt, _ = pqcrypt.open_module(enc_key, aad, cc[9], 0)
+                        cc = dict(cc)
+                        cc[3], _ = _read_struct(memoryview(pt), 0)
+                    except InvalidTag:
+                        if not fallback:
+                            raise
+                        # sealed ColumnMetaData the reader cannot open:
+                        # the leaf is known by its crypto path, no more
+                        key_missing, enc_key = True, None
+                        cc = {**cc, 3: {2: [], 3: ccrypt[2].get(1, []),
+                                        4: 0, 5: 0, 7: 0, 9: 0}}
             md = cc[3]    # ColumnChunk.meta_data
             name = b".".join(md[3]).decode()
             if name not in schema:
@@ -446,6 +464,7 @@ def column_chunks(meta: dict, ctx=None,
                 oi_off=cc.get(4), oi_len=cc.get(5),
                 ci_off=cc.get(6), ci_len=cc.get(7),
                 data_page_offset=md[9], enc_stats=md.get(13),
+                stats=md.get(12),
                 leaf_el=li.leaf_el, crc_mode=crc_mode,
             ))
         groups.append(cols)
@@ -757,7 +776,10 @@ def _decode_chunk_levels(data: bytes, cc: ColumnChunkInfo,
             rl_enc, dl_enc = ph.get(4, E_RLE), ph.get(3, E_RLE)
             body = payload
             reps = defs = None
-            if cc.max_rep:
+            # a 0-value page carries empty u32-prefixed level sections,
+            # or none at all (the engine writer before it emitted them)
+            levels = n or body[:4] == bytes(4)
+            if cc.max_rep and levels:
                 if rl_enc == 4:                       # BIT_PACKED
                     reps, used = _legacy_bitpacked_levels(
                         body, bw_rep, n)
@@ -765,7 +787,7 @@ def _decode_chunk_levels(data: bytes, cc: ColumnChunkInfo,
                     reps, used = rle.decode_with_length_prefix(
                         body, bw_rep, n)
                 body = body[used:]
-            if cc.max_def:
+            if cc.max_def and levels:
                 if dl_enc == 4:                       # BIT_PACKED
                     defs, used = _legacy_bitpacked_levels(
                         body, bw_def, n)
@@ -1195,13 +1217,25 @@ def _leaf_unsigned(leaf_el: dict | None) -> bool:
     return leaf_el.get(6) in (11, 12, 13, 14)    # UINT_8..UINT_64
 
 
-def stat_value(ptype: int, b: bytes, unsigned: bool = False):
-    """PLAIN-serialized Statistics/ColumnIndex bound -> comparable
-    python value (None = type has no usable order here)."""
+def _leaf_decimal(leaf_el: dict | None) -> bool:
+    """True when the leaf is annotated DECIMAL (logical or converted)."""
+    if not leaf_el:
+        return False
+    return 5 in (leaf_el.get(10) or {}) or leaf_el.get(6) == 5
+
+
+def stat_value(cc: ColumnChunkInfo, b: bytes):
+    """PLAIN-serialized Statistics/ColumnIndex bound of chunk ``cc`` ->
+    comparable python value in the domain ``storage_value`` puts filter
+    values in (None = type has no usable order here): ints unsigned when
+    the leaf says so, and a DECIMAL stored as BYTE_ARRAY or
+    FIXED_LEN_BYTE_ARRAY as its unscaled big-endian two's-complement
+    int."""
+    ptype, uns = cc.physical_type, _leaf_unsigned(cc.leaf_el)
     if ptype == T_INT32:
-        return struct.unpack("<I" if unsigned else "<i", b)[0]
+        return struct.unpack("<I" if uns else "<i", b)[0]
     if ptype == T_INT64:
-        return struct.unpack("<Q" if unsigned else "<q", b)[0]
+        return struct.unpack("<Q" if uns else "<q", b)[0]
     if ptype == T_FLOAT:
         return struct.unpack("<f", b)[0]
     if ptype == T_DOUBLE:
@@ -1209,8 +1243,96 @@ def stat_value(ptype: int, b: bytes, unsigned: bool = False):
     if ptype == T_BOOLEAN:
         return b != b"\x00"
     if ptype in (T_BYTE_ARRAY, T_FLBA):
+        if _leaf_decimal(cc.leaf_el):
+            return int.from_bytes(b, "big", signed=True) if b else None
         return b
     return None
+
+
+def chunk_bounds(cc: ColumnChunkInfo) -> tuple:
+    """(min, max, null_count) of a chunk from its footer Statistics
+    (min_value/max_value), None where absent or unreadable."""
+    st = cc.stats or {}
+    try:
+        return (stat_value(cc, st[6]), stat_value(cc, st[5]), st.get(3))
+    except (KeyError, struct.error):
+        return None, None, st.get(3)
+
+
+def storage_value(v, leaf_el: dict | None):
+    """Predicate value -> the column's physical-storage comparable
+    (dates to epoch days, datetimes to the column's epoch unit,
+    Decimals to the unscaled int, strings to bytes) so pruning
+    comparisons never mix types. Idempotent."""
+    import datetime
+    import decimal
+
+    leaf_el = leaf_el or {}
+    if isinstance(v, str):
+        return v.encode()
+    if isinstance(v, decimal.Decimal):
+        dec = (leaf_el.get(10) or {}).get(5)
+        if dec is None and leaf_el.get(6) != 5:
+            return v                       # not a DECIMAL column
+        scale = (dec.get(1) if dec is not None else
+                 leaf_el.get(7, 0)) or 0
+        # unscaled storage integer; a value finer than the column's
+        # scale stays an exact Decimal between two storage integers
+        u = v.scaleb(scale, decimal.Context(prec=100))
+        return int(u) if u == u.to_integral_value() else u
+    if isinstance(v, datetime.datetime):
+        ts = (leaf_el.get(10) or {}).get(8) or {}
+        unit = ts.get(2) or {}
+        us = int(v.timestamp() * 1_000_000) if v.tzinfo else int(
+            v.replace(tzinfo=datetime.timezone.utc).timestamp()
+            * 1_000_000)
+        if 1 in unit or leaf_el.get(6) == 9:      # millis
+            return us // 1000
+        if 3 in unit:                              # nanos
+            return us * 1000
+        return us
+    if isinstance(v, datetime.date):
+        return (v - datetime.date(1970, 1, 1)).days
+    return v
+
+
+def storage_filter(f, leaf_el: dict | None):
+    """``f`` with its value(s) in the column's storage domain
+    (``storage_value``)."""
+    import dataclasses
+
+    if not hasattr(f, "value"):
+        return f
+    if isinstance(f.value, tuple):                       # In
+        return dataclasses.replace(f, value=tuple(
+            storage_value(v, leaf_el) for v in f.value))
+    return dataclasses.replace(f, value=storage_value(f.value, leaf_el))
+
+
+def bloom_hashes(cc: ColumnChunkInfo, values: list):
+    """Bloom hashes of storage values the way a parquet writer hashed
+    the chunk's PLAIN values (ints at the physical width and
+    signedness); an int outside the physical range is dropped (no value
+    of the column can equal it); None when a value does not match the
+    physical type."""
+    from . import bloom as bloommod
+
+    out = []
+    for v in values:
+        if isinstance(v, (bytes, str)) and cc.physical_type in (
+                T_BYTE_ARRAY, T_FLBA):
+            out.append(v.encode() if isinstance(v, str) else v)
+        elif isinstance(v, int) and not isinstance(v, bool) \
+                and cc.physical_type in (T_INT32, T_INT64):
+            try:
+                out.append(v.to_bytes(
+                    4 if cc.physical_type == T_INT32 else 8, "little",
+                    signed=not _leaf_unsigned(cc.leaf_el)))
+            except OverflowError:
+                continue
+        else:
+            return None
+    return bloommod.xxhash64_bytes(out)
 
 
 def read_column_index(path: str, cc: ColumnChunkInfo):
@@ -1222,10 +1344,9 @@ def read_column_index(path: str, cc: ColumnChunkInfo):
     buf = read_range(path, cc.ci_off, cc.ci_len)
     s, _ = _read_struct(memoryview(buf), 0)
     null_pages = s[1]
-    uns = _leaf_unsigned(cc.leaf_el)
-    mins = [None if np_ else stat_value(cc.physical_type, b, uns)
+    mins = [None if np_ else stat_value(cc, b)
             for np_, b in zip(null_pages, s[2])]
-    maxs = [None if np_ else stat_value(cc.physical_type, b, uns)
+    maxs = [None if np_ else stat_value(cc, b)
             for np_, b in zip(null_pages, s[3])]
     return {"null_pages": null_pages, "mins": mins, "maxs": maxs,
             "boundary_order": s.get(4, 0),
@@ -1266,39 +1387,31 @@ def intersect_ranges(a, b):
     return out
 
 
-def _pred_page_keep(ci, pred) -> list[bool]:
-    """Per-page may-match verdict for an eq/range predicate (advisory-
-    lossless: True unless the page bounds PROVE no row matches)."""
-    op = pred[0]
-
-    def enc(v):
-        return v.encode() if isinstance(v, str) else v
-
-    keep = []
-    for np_, mn, mx in zip(ci["null_pages"], ci["mins"], ci["maxs"]):
-        if np_:
-            keep.append(False)        # eq/range never matches NULL
-        elif mn is None or mx is None:
-            keep.append(True)
-        elif op == "eq":
-            keep.append(mn <= enc(pred[1]) <= mx)
-        elif op == "in":
-            keep.append(any(mn <= enc(v) <= mx for v in pred[1]))
-        elif op == "range":
-            keep.append(not (mx < enc(pred[1]) or enc(pred[2]) < mn))
-        else:
-            keep.append(True)
-    return keep
-
-
 def predicate_row_ranges(path: str, meta: dict, rg: int,
                          filters: dict, ctx=None):
-    """Intersect per-column ColumnIndex prunes into rg-local row
-    ranges. -> (ranges, pruned) where pruned=False means no usable
-    index existed (caller decodes the full row group)."""
+    """``page_row_ranges`` of row group ``rg`` for ``read_parquet_dir``
+    predicate tuples (eq / in / range) on top-level columns."""
+    from . import prune
+
     chunks = column_chunks(meta, ctx)[rg]
+    leaves = {c.top_name: c.leaf_el for c in chunks}
+    return page_row_ranges(path, chunks, {
+        col: [storage_filter(f, leaves.get(col))
+              for f in prune.from_tuple(col, pred)]
+        for col, pred in (filters or {}).items()})
+
+
+def page_row_ranges(path: str, chunks: list, filters: dict):
+    """Intersect per-column ColumnIndex prunes of one row group (its
+    ``column_chunks`` entry) into rg-local row ranges; ``filters`` maps
+    a column to Filters over storage values. -> (ranges, pruned) where
+    pruned=False means no usable index existed (caller decodes the full
+    row group). A page drops when ``prune.keep`` rules it out for a
+    filter; a null page holds no value a comparison can match."""
+    from . import prune
+
     ranges = None
-    for col, pred in (filters or {}).items():
+    for col, flts in filters.items():
         cc = next((c for c in chunks
                    if c.name == col or c.top_name == col), None)
         if cc is None or cc.enc_key is not None or cc.key_missing:
@@ -1307,9 +1420,14 @@ def predicate_row_ranges(path: str, meta: dict, rg: int,
         oi = read_offset_index(path, cc)
         if ci is None or oi is None:
             continue
-        exts = _page_extents(oi, cc.num_rows)
-        keep = _pred_page_keep(ci, pred)
-        r = merge_ranges([exts[i] for i in range(len(exts)) if keep[i]])
+        nan_in_bounds = cc.physical_type not in (T_FLOAT, T_DOUBLE)
+        r = merge_ranges([
+            (lo, hi) for (lo, hi), null_page, mn, mx in zip(
+                _page_extents(oi, cc.num_rows), ci["null_pages"],
+                ci["mins"], ci["maxs"])
+            if all(prune.keep(f, mn, mx, *(
+                (hi - lo, hi - lo) if null_page else (None, None)),
+                nan_in_bounds=nan_in_bounds) for f in flts)])
         ranges = r if ranges is None else intersect_ranges(ranges, r)
     if ranges is None:
         return None, False

@@ -759,20 +759,23 @@ def _page(pg_type: int, header_extra: bytes, payload: bytes,
 
 def _emit_data_page(out: bytearray, codec_id: int, page_version: int,
                     enc_id: int, n_entries: int, n_rows: int,
-                    n_nulls: int, rep_raw: bytes, def_raw: bytes,
+                    n_nulls: int, rep_raw: bytes | None,
+                    def_raw: bytes | None,
                     values: bytes,
                     pc: "_PageCrypt | None" = None) -> tuple[int, int]:
     """One data page, either grammar. v1: u32-prefixed level streams,
     whole payload compressed. v2: raw level streams stay uncompressed
     ahead of the values, and store-uncompressed-if-bigger returns via
-    the is_compressed flag (a freedom v1 does not offer)."""
+    the is_compressed flag (a freedom v1 does not offer). A level
+    stream is None when the column has none (max level 0); an empty
+    one (a 0-value page) still gets its v1 length prefix."""
     if pc is not None and page_version != 1:
         raise ValueError("modular encryption implemented for v1 pages")
     if page_version == 1:
         level = b""
-        if rep_raw:
+        if rep_raw is not None:
             level += len(rep_raw).to_bytes(4, "little") + rep_raw
-        if def_raw:
+        if def_raw is not None:
             level += len(def_raw).to_bytes(4, "little") + def_raw
         phdr = _tstruct([
             (1, CT_I32, n_entries),
@@ -783,6 +786,7 @@ def _emit_data_page(out: bytearray, codec_id: int, page_version: int,
         pg, u, c = _page(PG_DATA, phdr, level + values, codec_id, pc)
         out += pg
         return u, c
+    rep_raw, def_raw = rep_raw or b"", def_raw or b""
     body = values
     compressed = False
     if codec_id != 0 and len(values) > 64:
@@ -858,7 +862,10 @@ def _pick_encoding(col: _Col, arr_nonnull: pa.Array, vals, want: str):
         if nd_s * 2 > len(samp) or nd_s > DICT_MAX_NDV:
             return ("delta" if col.ptype in (T_INT32, T_INT64)
                     else "plain"), None
-    denc = arr_nonnull.dictionary_encode()        # C++ hash, not a sort
+    # C++ hash, not a sort; a DECIMAL's dictionary holds its unscaled
+    # storage integers, not the Decimal objects
+    denc = (pa.array(v) if col.scale is not None
+            else arr_nonnull).dictionary_encode()
     uniq = np.asarray(denc.dictionary)
     nd = len(uniq)
     if want == "dict" or (nd <= DICT_MAX_NDV
@@ -1192,9 +1199,9 @@ def _write_levels_chunk(out: bytearray, col: _Col, rep: np.ndarray,
         s_ent, e_ent = int(ent_of_row[row]), int(ent_of_row[hi_row])
         v_lo, v_hi = int(val_prefix[s_ent]), int(val_prefix[e_ent])
         rep_raw = (rle.encode(rep[s_ent:e_ent], bw_rep)
-                   if max_rep else b"")
+                   if max_rep else None)
         def_raw = (rle.encode(defs[s_ent:e_ent], bw_def)
-                   if max_def else b"")
+                   if max_def else None)
         if enc_name == "dict":
             body = bytes([bw]) + rle.encode(codes[v_lo:v_hi], bw)
         else:
@@ -1319,7 +1326,7 @@ def _write_chunk(out: bytearray, col: _Col, arr: pa.Array, codec_id: int,
             def_raw = rle.encode(pdefs, bw_def)
         else:
             v_lo, v_hi = row, hi_row
-            def_raw = b""
+            def_raw = None
         if enc_name == "dict":
             body = bytes([bw]) + rle.encode(codes[v_lo:v_hi], bw)
         else:
@@ -1328,7 +1335,7 @@ def _write_chunk(out: bytearray, col: _Col, arr: pa.Array, codec_id: int,
         pg_off = len(out)
         u, c = _emit_data_page(
             out, codec_id, page_version, enc_id, hi_row - row,
-            hi_row - row, (hi_row - row) - (v_hi - v_lo), b"", def_raw,
+            hi_row - row, (hi_row - row) - (v_hi - v_lo), None, def_raw,
             body, pc)
         if want_pidx:
             mn = mx = None

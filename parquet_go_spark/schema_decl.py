@@ -226,6 +226,7 @@ def _field_of(item: dict, decl: SchemaDecl, top: bool) -> pa.Field:
     nullable = rep != "REQUIRED"
     ptype = t.get("type", "").upper()
     fields = item.get("Fields") or []
+    md = None
 
     if ptype == "LIST":
         if len(fields) != 1:
@@ -241,17 +242,26 @@ def _field_of(item: dict, decl: SchemaDecl, top: bool) -> pa.Field:
                 f"got {len(fields)}")
         k = _field_of(fields[0], decl, top=False)
         v = _field_of(fields[1], decl, top=False)
-        typ = pa.map_(k.type, v)
+        typ = pa.map_(k.with_nullable(False), v)
     elif not ptype:                                   # struct group
         if not fields:
             raise ValueError(f"group {name!r} needs Fields")
         typ = pa.struct([_field_of(f, decl, top=False) for f in fields])
     else:
         typ, logical = _leaf_type(t)
-        if rep == "REPEATED":                         # legacy bare list
-            typ, nullable = pa.list_(typ), False
         if top and logical:
             decl.logical_types[name] = logical
+        elif logical:
+            # a nested leaf carries its annotation as field metadata,
+            # which the writer reads on every leaf
+            spec = dict(logical) if isinstance(logical, dict) \
+                else {"kind": logical}
+            md = {b"pgs_logical": spec.pop("kind").encode()}
+            md.update({f"pgs_geo_{k}".encode(): str(v).encode()
+                       for k, v in spec.items()})
+        if rep == "REPEATED":                         # legacy bare list
+            typ, nullable = pa.list_(pa.field("item", typ, True, md)), False
+            md = None
     if top:
         _collect_options(name, t, decl)
     else:
@@ -262,7 +272,7 @@ def _field_of(item: dict, decl: SchemaDecl, top: bool) -> pa.Field:
             raise ValueError(
                 f"field {name!r}: tag {tag}= is only honoured on a "
                 "top-level column, not on a nested field")
-    return pa.field(name, typ, nullable)
+    return pa.field(name, typ, nullable, md)
 
 
 def parse_json_schema(text: str) -> SchemaDecl:

@@ -90,6 +90,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from .. import prune
+
 _MANIFEST_COLUMNS = ["part_id", "col", "vmin", "vmax", "count", "null_count"]
 _READ_BATCH_ROWS = 32768
 
@@ -910,116 +912,55 @@ def _coerce(bound: str, like):
     """Parse a manifest bound string into the filter value's domain; None
     means "cannot compare -> do not prune" (invalid-stats defense,
     reader/index.go:65-87)."""
-    if bound is None or bound == "":
-        return None
-    if isinstance(like, bool):
+    if not bound or isinstance(like, bool):
         return None  # str(True) doesn't order; booleans never prune
-    if isinstance(like, int):
-        try:
-            return int(bound)
-        except ValueError:
-            try:
-                return float(bound)
-            except ValueError:
-                return None
-    if isinstance(like, float):
-        try:
-            return float(bound)
-        except ValueError:
-            return None
     if isinstance(like, str):
         return bound
+    parsers = {int: (int, float), float: (float,)}.get(type(like), ())
+    for parse in parsers:
+        try:
+            return parse(bound)
+        except ValueError:
+            pass
     return None
 
 
-def _tkey(x):
-    """Total-order sort key matching Spark's (and DuckDB's) float
-    comparison semantics: NaN compares greater than every other value,
-    ±inf are ordinary values. Chunk stats are folded under the same
-    order (chunk.py float stats), so pruning with this key is exact.
-    Non-floats order unchanged."""
-    if isinstance(x, float) and x != x:
-        return (1, 0.0)
-    return (0, x)
+def _manifest_keep(f: Filter, vmin, vmax, nulls=None, rows=None) -> bool:
+    """May a chunk or page with manifest bounds ``vmin``/``vmax`` (the
+    strings the encode job renders; "" or None when absent) hold a row
+    matching ``f``? The bounds parse in the filter value's domain."""
+    vals = prune.point_values(f) if isinstance(f, In) else None
+    like = vals[0] if vals else getattr(f, "value", None)
+    return prune.keep(f, _coerce(vmin, like), _coerce(vmax, like),
+                      nulls, rows)
 
 
-def _stats_keep(vmin: str, vmax: str, f: Filter) -> bool:
-    """May this chunk's [vmin, vmax] contain a row satisfying f? Truncated
-    string bounds only ever widen the interval (stats_trunc.py), so a
-    False here is safe to prune on. Bounds and filter values compare
-    under the engine total order (NaN greatest, ±inf in-band) so
-    non-finite data and non-finite filter values both prune losslessly."""
-    if isinstance(f, StringStartsWith):
-        # may [vmin, vmax] hold a string starting with p? Any such s has
-        # s >= p (so vmax < p prunes) and s[:len(p)] == p with
-        # vmin <= s implying vmin[:len(p)] <= p (so a greater cut-down
-        # vmin prunes). Truncated bounds only widen the interval.
-        p = f.value
-        if not isinstance(p, str) or not p or not isinstance(vmin, str) \
-                or not isinstance(vmax, str) or not vmin or not vmax:
-            return True
-        return vmax >= p and vmin[:len(p)] <= p
-    if isinstance(f, EqualNullSafe) and f.value is None:
-        # null-matching handled by null_count in _candidate_parts;
-        # value stats cannot speak to it
-        return True
-    if isinstance(f, (EqualTo, EqualNullSafe, GreaterThan,
-                      GreaterThanOrEqual, LessThan, LessThanOrEqual)):
-        v = f.value
-        lo, hi = _coerce(vmin, v), _coerce(vmax, v)
-        if lo is None or hi is None:
-            return True
-        try:
-            kv, klo, khi = _tkey(v), _tkey(lo), _tkey(hi)
-            if isinstance(f, (EqualTo, EqualNullSafe)):
-                return klo <= kv <= khi
-            if isinstance(f, GreaterThan):
-                return khi > kv
-            if isinstance(f, GreaterThanOrEqual):
-                return khi >= kv
-            if isinstance(f, LessThan):
-                return klo < kv
-            return klo <= kv
-        except TypeError:
-            return True
-    if isinstance(f, In):
-        vs = [v for v in f.value if v is not None]
-        if not vs:
-            return True
-        lo, hi = _coerce(vmin, vs[0]), _coerce(vmax, vs[0])
-        if lo is None or hi is None:
-            return True
-        try:
-            kvs = sorted(_tkey(v) for v in vs)
-            return _tkey(hi) >= kvs[0] and _tkey(lo) <= kvs[-1]
-        except TypeError:
-            return True
-    return True
+def _pgs_hashes(values: list):
+    """Bloom hashes of filter values the way ``bloom.hash_values`` hashed
+    the chunk (every int as int64); None when a value cannot be."""
+    import pyarrow as pa
+
+    from .. import bloom as bloommod
+
+    try:
+        return bloommod.hash_values(pa.array(values))
+    except (TypeError, ValueError, OverflowError, pa.ArrowException):
+        return None
 
 
-def _bloom_misses(d, aliases: list[str], values: list,
+def _bloom_misses(d, aliases: list[str], hashes,
                   part_ids: set[int]) -> set[int]:
     """part_ids (of ``part_ids``) whose chunk carries a split-block bloom
-    that rules out every one of ``values`` — the only partitions a point
-    filter may drop. One-sided: a chunk without a bloom, a partition with
-    no chunk under any of ``aliases`` (the column's current + historical
-    names, disjoint per partition) and a value the blooms cannot hash
-    all keep their partition."""
-    import numpy as np
+    that rules out every value ``hashes`` came from — the only
+    partitions a point filter may drop. One-sided: a chunk without a
+    bloom and a partition with no chunk under any of ``aliases`` (the
+    column's current + historical names, disjoint per partition) keep
+    their partition."""
     import pyarrow.dataset as pads
 
     from .. import bloom as bloommod
 
-    vs = [v for v in values if v is not None]
-    if not vs or not part_ids:
-        return set()
-    if all(isinstance(v, int) and not isinstance(v, bool) for v in vs):
-        hashes = bloommod.xxhash64_u64(np.asarray(vs, dtype=np.int64))
-    elif all(isinstance(v, (str, bytes)) for v in vs):
-        hashes = bloommod.xxhash64_bytes(
-            [v.encode() if isinstance(v, str) else v for v in vs]
-        )
-    else:
+    if not part_ids:
         return set()
     t = d.to_table(
         columns=["part_id", "bloom"],
@@ -1030,8 +971,8 @@ def _bloom_misses(d, aliases: list[str], values: list,
     return {
         pid for pid, blm in zip(t.column("part_id").to_pylist(),
                                 t.column("bloom").to_pylist())
-        if not bloommod.SplitBlockBloom.frombytes(blm)
-        .check_hashes(hashes).any()
+        if not prune.bloom_keep(bloommod.SplitBlockBloom.frombytes(blm),
+                                hashes)
     }
 
 
@@ -1041,9 +982,14 @@ def _candidate_parts(
     """Driver-side partition pruning from manifest stats + blooms. Reads
     only metadata columns of the blob files (parquet column pruning keeps
     blob bytes untouched) — the footer read, bounded by parts x cols.
-    Point filters (``=``, ``IN``, non-null ``<=>``) probe whatever blooms
-    the column's chunks carry, whichever writer built them: the chunks,
-    not the store meta, say where a bloom exists.
+    Every filter consults each chunk's bounds and exact null/row counts
+    through ``prune.keep``; point filters (``=``, ``IN``, non-null
+    ``<=>``) then probe whatever blooms the column's chunks carry,
+    whichever writer built them: the chunks, not the store meta, say
+    where a bloom exists. The stats and blooms of a list column are over
+    its elements, so a scalar ``EqualTo`` on an array column means "some
+    element equals" (the operators' gate queries use it; Spark never
+    pushes one).
     ``d``/``meta`` let the caller open the dataset and store meta once
     for the whole planning pass (and select the view — a branch read's
     ``d`` already holds the branch's file set)."""
@@ -1063,7 +1009,7 @@ def _candidate_parts(
         stats.column("null_count").to_pylist(),
     ):
         parts.add(pid)
-        by_col.setdefault(col, {})[pid] = (vmin, vmax, cnt, nulls)
+        by_col.setdefault(col, {})[pid] = (vmin, vmax, nulls, cnt)
     keep = parts
     meta = _meta(path) if meta is None else meta
     renames = meta.get("column_renames") or {}
@@ -1076,7 +1022,7 @@ def _candidate_parts(
         if col == "_pgs_part":
             # the virtual partition-id column prunes from the id itself —
             # delete_where("_pgs_part = k AND ...") plans one partition
-            keep = {p for p in keep if _stats_keep(str(p), str(p), f)}
+            keep = {p for p in keep if prune.keep(f, p, p)}
             continue
         if col == "_pgs_commit":
             # the lineage column prunes from the commit timeline itself:
@@ -1099,10 +1045,8 @@ def _candidate_parts(
                     return None
                 return base + i + 1
 
-            keep = {
-                p for p in keep
-                if (k := _kof(p)) is None or _stats_keep(str(k), str(k), f)
-            }
+            keep = {p for p in keep
+                    if prune.keep(f, k := _kof(p), k)}
             continue
         # schema evolution: a renamed column's stats live under whichever
         # alias each partition was written with (disjoint per part); a
@@ -1122,30 +1066,17 @@ def _candidate_parts(
             rows.update(by_col.get(c) or {})
         if not rows:
             continue
-        if isinstance(f, IsNotNull):
-            keep = {p for p in keep
-                    if p not in rows or rows[p][3] < rows[p][2]}
-            continue
-        if isinstance(f, IsNull) or (
-            isinstance(f, EqualNullSafe) and f.value is None
-        ):
-            # null_count is exact per chunk: an all-non-null partition
-            # cannot satisfy IS NULL / <=> NULL (a partition predating
-            # an added column stays — its default may be null)
-            keep = {p for p in keep
-                    if p not in rows or rows[p][3] > 0}
-            continue
+        # null_count is exact per chunk (an all-non-null partition cannot
+        # satisfy IS NULL / <=> NULL); a partition predating an added
+        # column stays — its default may be null
         keep = {
             p for p in keep
-            if p not in rows or _stats_keep(rows[p][0], rows[p][1], f)
+            if p not in rows or _manifest_keep(f, *rows[p])
         }
-        if col not in added and (
-            isinstance(f, (EqualTo, In))
-            or (isinstance(f, EqualNullSafe) and f.value is not None)
-        ):
-            vals = (list(f.value) if isinstance(f, In)
-                    else [f.value])
-            keep = keep - _bloom_misses(d, aliases, vals, keep)
+        vals = prune.point_values(f)
+        if vals and col not in added and (
+                hashes := _pgs_hashes(vals)) is not None:
+            keep = keep - _bloom_misses(d, aliases, hashes, keep)
     return sorted(keep)
 
 
@@ -1164,13 +1095,8 @@ def _page_keep_map(
     unpaged chunk carries one page and is decoded whole."""
     import pyarrow.dataset as pads
 
-    usable = [
-        f for f in filters
-        if isinstance(f, (EqualTo, EqualNullSafe, In, GreaterThan,
-                          GreaterThanOrEqual, LessThan, LessThanOrEqual,
-                          StringStartsWith))
-        and len(f.attribute) == 1
-    ]
+    usable = [f for f in filters  # page bounds answer value filters
+              if hasattr(f, "value") and len(f.attribute) == 1]
     if meta is None:
         meta = _meta(path)
     if not usable or not part_ids:
@@ -1229,8 +1155,7 @@ def _page_keep_map(
             npages = max(npages, len(pages))
             mine = {
                 i for i, p in enumerate(pages)
-                if p.get("lo") is None or p.get("hi") is None
-                or _stats_keep(p["lo"], p["hi"], f)
+                if _manifest_keep(f, p.get("lo"), p.get("hi"))
             }
             keep = mine if keep is None else keep & mine
         if pos_filters:
@@ -1240,8 +1165,7 @@ def _page_keep_map(
                 for f in pos_filters:
                     mine = {
                         i for i, p in enumerate(pages)
-                        if _stats_keep(str(p["r"]), str(p["r"] + p["n"] - 1),
-                                       f)
+                        if prune.keep(f, p["r"], p["r"] + p["n"] - 1)
                     }
                     keep = mine if keep is None else keep & mine
         if keep is not None and npages > 1 and len(keep) < npages:
@@ -1590,12 +1514,7 @@ def manifest_aggregates(path: str, cols: Sequence[str]) -> list[dict]:
 
     # engine total order (how Spark and DuckDB compare doubles): NaN is
     # the greatest value — chunk stats pin it the same way
-    def okey(v):
-        if isinstance(v, float):
-            return (1 if math.isnan(v) else 0, v if not math.isnan(v)
-                    else 0.0)
-        return (0, v)
-
+    okey = prune.order_key
     out = []
     for c in cols:
         chunks = per_col[c]

@@ -7,10 +7,11 @@ target length before landing in metadata — the *min* bound truncates
 downward (a prefix is always <= the full value), while the *max* bound
 must round UP: increment the last byte with carry so the truncated bound
 still sorts >= every value it covers; if every byte is 0xFF the bound is
-dropped (reported untruncatable). For UTF-8 data the increment walks back
-to a character boundary first so the bound stays valid UTF-8.
+dropped (reported untruncatable). UTF-8 data cuts both bounds at a
+character boundary and rounds the max's last character up, so the bounds
+stay valid UTF-8 and order the same as strings and as bytes.
 
-Manifest stats are metadata consumed by pruning (pruned.py) — an
+Manifest stats are metadata consumed by pruning (prune.py) — an
 over-wide bound is safe (decodes a partition needlessly), an under-wide
 bound is not (skips data), which is exactly the reference's invariant.
 """
@@ -20,44 +21,47 @@ from __future__ import annotations
 DEFAULT_TRUNCATE_LEN = 64
 
 
+def _char_cut(value: bytes, limit: int) -> int:
+    """The longest cut of UTF-8 ``value`` at most ``limit`` bytes long
+    that ends on a character boundary."""
+    i = limit
+    while i > 0 and 0x80 <= value[i] <= 0xBF:       # continuation byte
+        i -= 1
+    return i
+
+
 def truncate_min(value: bytes, limit: int = DEFAULT_TRUNCATE_LEN) -> bytes:
-    """Prefix-truncate a lower bound (always sorts <= the original)."""
+    """Prefix-truncate a lower bound (always sorts <= the original), at a
+    UTF-8 character boundary so a string bound stays valid."""
     if len(value) <= limit:
         return value
-    return value[:limit]
-
-
-def _is_utf8_continuation(b: int) -> bool:
-    return 0x80 <= b <= 0xBF
+    return value[:_char_cut(value, limit)]
 
 
 def truncate_max(
     value: bytes, limit: int = DEFAULT_TRUNCATE_LEN, utf8: bool = True
 ) -> bytes | None:
-    """Truncate an upper bound, rounding up with carry.
-
-    Returns None when no valid truncated upper bound exists (all-0xFF
-    prefix) — the caller should then keep the full value or omit the
-    bound, mirroring statistics.go's fallback."""
+    """Truncate an upper bound, rounding up: UTF-8 values round their
+    last whole character up to the next code point, so the bound stays
+    valid UTF-8. Returns None when no truncated upper bound exists
+    (all-0xFF prefix) — the caller should then keep the full value or
+    omit the bound, mirroring statistics.go's fallback."""
     if len(value) <= limit:
         return value
-    prefix = bytearray(value[:limit])
-    i = len(prefix) - 1
-    while i >= 0:
-        if utf8 and _is_utf8_continuation(prefix[i]):
-            i -= 1  # step back to the character's lead byte
-            continue
-        if prefix[i] != 0xFF:
-            prefix[i] += 1
-            out = bytes(prefix[: i + 1])
-            if utf8:
-                try:
-                    out.decode("utf-8")
-                except UnicodeDecodeError:
-                    return _truncate_max_binary(value, limit)
-            return out
-        i -= 1
-    return None
+    if utf8:
+        try:
+            chars = value[:_char_cut(value, limit)].decode("utf-8")
+        except UnicodeDecodeError:
+            return _truncate_max_binary(value, limit)
+        while chars:
+            c = ord(chars[-1]) + 1
+            if c == 0xD800:                 # skip the surrogate block
+                c = 0xE000
+            if c <= 0x10FFFF:
+                return (chars[:-1] + chr(c)).encode("utf-8")
+            chars = chars[:-1]
+        return None
+    return _truncate_max_binary(value, limit)
 
 
 def _truncate_max_binary(value: bytes, limit: int) -> bytes | None:

@@ -330,20 +330,23 @@ def test_review_findings_regressions(spark, orders, tmp_path):
     """Pins the code-review fixes: empty stores read/append cleanly,
     non-finite filter values never prune, batch/stream mixing and
     layout-flipping appends are rejected."""
-    from parquet_go_spark.sources.pgs_datasource import _stats_keep
+    from parquet_go_spark.sources.pgs_datasource import _manifest_keep
 
     # non-finite filter values prune EXACTLY under the engine total
     # order (stats keep ±inf in-band and pin NaN as greatest): a finite
     # [1, 2] chunk cannot hold inf, nor anything > NaN
-    assert not _stats_keep("1.0", "2.0", EqualTo(("c",), float("inf")))
-    assert not _stats_keep("1.0", "2.0", GreaterThan(("c",), float("nan")))
-    assert _stats_keep("1.0", "2.0", In(("c",), (0.5, float("inf"))))
+    assert not _manifest_keep(EqualTo(("c",), float("inf")), "1.0", "2.0")
+    assert not _manifest_keep(GreaterThan(("c",), float("nan")),
+                              "1.0", "2.0")
+    # an In-list drops the chunk when none of its values is in bounds
+    # (the envelope [0.5, inf] covers [1, 2], no value does)
+    assert not _manifest_keep(In(("c",), (0.5, float("inf"))), "1.0", "2.0")
     # and non-finite BOUNDS keep what Spark semantics can match
-    assert _stats_keep("1.0", "nan", GreaterThan(("c",), 5.0))
-    assert _stats_keep("1.0", "nan", GreaterThan(("c",), float("inf")))
-    assert _stats_keep("nan", "nan", EqualTo(("c",), float("nan")))
-    assert not _stats_keep("nan", "nan", LessThanOrEqual(("c",), 9e99))
-    assert _stats_keep("-inf", "2.0", LessThanOrEqual(("c",), -9e99))
+    assert _manifest_keep(GreaterThan(("c",), 5.0), "1.0", "nan")
+    assert _manifest_keep(GreaterThan(("c",), float("inf")), "1.0", "nan")
+    assert _manifest_keep(EqualTo(("c",), float("nan")), "nan", "nan")
+    assert not _manifest_keep(LessThanOrEqual(("c",), 9e99), "nan", "nan")
+    assert _manifest_keep(LessThanOrEqual(("c",), -9e99), "-inf", "2.0")
 
     # an empty dataframe commits a store that reads back as 0 rows and
     # accepts a later append starting at part 0
@@ -403,7 +406,10 @@ def test_stats_keep_comparators():
     """The driver-side pruning comparators: parse in the filter value's
     domain, never prune on unparseable/absent bounds, exact int compare
     beyond double precision."""
-    from parquet_go_spark.sources.pgs_datasource import _coerce, _stats_keep
+    from parquet_go_spark.sources.pgs_datasource import (
+        _coerce,
+        _manifest_keep,
+    )
     from pyspark.sql.datasource import LessThan
 
     big = (1 << 60) + 1
@@ -415,20 +421,21 @@ def test_stats_keep_comparators():
 
     # exact boundary: [big, big+2] must keep EqualTo(big+1) but a double
     # comparison would collapse all three values
-    assert _stats_keep(str(big), str(big + 2), EqualTo(("c",), big + 1))
-    assert not _stats_keep(str(big), str(big + 2), EqualTo(("c",), big + 5))
+    assert _manifest_keep(EqualTo(("c",), big + 1), str(big), str(big + 2))
+    assert not _manifest_keep(EqualTo(("c",), big + 5),
+                              str(big), str(big + 2))
     # one-sided ranges
-    assert _stats_keep("10", "20", GreaterThanOrEqual(("c",), 20))
-    assert not _stats_keep("10", "20", GreaterThan(("c",), 20))
-    assert not _stats_keep("10", "20", LessThan(("c",), 10))
+    assert _manifest_keep(GreaterThanOrEqual(("c",), 20), "10", "20")
+    assert not _manifest_keep(GreaterThan(("c",), 20), "10", "20")
+    assert not _manifest_keep(LessThan(("c",), 10), "10", "20")
     # string bounds compare lexicographically (truncation only widens)
-    assert _stats_keep("apple", "mango", EqualTo(("c",), "banana"))
-    assert not _stats_keep("apple", "mango", EqualTo(("c",), "zebra"))
-    # In-list reduces to its [min, max] envelope
-    assert _stats_keep("10", "20", In(("c",), (1, 15)))
-    assert not _stats_keep("10", "20", In(("c",), (1, 5)))
+    assert _manifest_keep(EqualTo(("c",), "banana"), "apple", "mango")
+    assert not _manifest_keep(EqualTo(("c",), "zebra"), "apple", "mango")
+    # an In-list keeps the chunk when one of its values is in bounds
+    assert _manifest_keep(In(("c",), (1, 15)), "10", "20")
+    assert not _manifest_keep(In(("c",), (1, 5)), "10", "20")
     # unparseable bounds keep the partition
-    assert _stats_keep("", "", EqualTo(("c",), 5))
+    assert _manifest_keep(EqualTo(("c",), 5), "", "")
 
 
 def test_writer_roundtrip_and_append(spark, orders, tmp_out):

@@ -121,8 +121,6 @@ def test_column_keys_on_nested_columns(tmp_path, key_name):
     """A column key named by a nested column seals every leaf of it (or,
     by dotted leaf path, that one leaf): a reader holding only the
     footer key cannot decode it, the keyed reader gets the input."""
-    from cryptography.exceptions import InvalidTag
-
     tbl = _nested_tbl()
     f = str(tmp_path / "n.parquet")
     kf, kc = os.urandom(16), os.urandom(16)
@@ -130,7 +128,7 @@ def test_column_keys_on_nested_columns(tmp_path, key_name):
                   encryption=C.Encrypt(footer_key=kf,
                                        column_keys={key_name: (kc, b"")}))
     top = key_name.split(".")[0]
-    with pytest.raises(InvalidTag):
+    with pytest.raises(ValueError, match="supply decryption keys"):
         P.decode_table(f, columns=[top],
                        decryption=C.Decrypt(footer_key=kf))
     got = P.decode_table(f, decryption=C.Decrypt(
@@ -483,3 +481,29 @@ print('EXTERNAL_CTR_DECRYPT_OK')
                           capture_output=True, text=True, timeout=120)
     assert proc.returncode == 0, proc.stderr[-800:]
     assert "EXTERNAL_CTR_DECRYPT_OK" in proc.stdout
+
+
+def test_footer_key_reads_columns_without_a_column_key(tmp_path):
+    """A reader holding only the footer key decodes every column but the
+    one sealed with its own key; reading that one fails, and a wrong
+    column key still fails authentication."""
+    from cryptography.exceptions import InvalidTag
+
+    tbl = pa.table({"a": pa.array(np.arange(300, dtype=np.int64)),
+                    "b": pa.array([f"s{i}" for i in range(300)])})
+    f = str(tmp_path / "k.parquet")
+    kf, kc = os.urandom(16), os.urandom(16)
+    W.write_table(tbl, f, row_group_rows=100, encryption=C.Encrypt(
+        footer_key=kf, column_keys={"b": (kc, b"")}))
+    got = P.decode_table(f, columns=["a"],
+                         decryption=C.Decrypt(footer_key=kf))
+    assert got.column("a").to_pylist() == tbl.column("a").to_pylist()
+    with pytest.raises(ValueError, match="'b' is encrypted"):
+        P.decode_table(f, columns=["b"],
+                       decryption=C.Decrypt(footer_key=kf))
+    with pytest.raises(InvalidTag):
+        P.decode_table(f, columns=["a"], decryption=C.Decrypt(
+            footer_key=kf, column_keys={"b": os.urandom(16)}))
+    both = P.decode_table(f, decryption=C.Decrypt(
+        footer_key=kf, column_keys={"b": kc}))
+    assert both.to_pylist() == tbl.to_pylist()

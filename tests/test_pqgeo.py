@@ -40,7 +40,7 @@ def test_footer_carries_geo_stats_and_prunes(tmp_path):
     assert out.column("g").to_pylist() == t.column("g").to_pylist()
     # unit pruning: only the second row group intersects x in [300,400]
     pred = ("bbox", 300.0, 0.0, 400.0, 300.0)
-    keeps = [psk._rg_stats_keep(meta, gi, "g", pred) for gi in range(4)]
+    keeps = [psk._rg_bbox_keep(meta, gi, "g", pred) for gi in range(4)]
     assert keeps == [False, True, False, False]
 
 

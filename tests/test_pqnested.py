@@ -184,6 +184,36 @@ def test_struct_of_struct_with_list(tmp_path):
         t.column("s").to_pylist()
 
 
+@pytest.mark.parametrize("page_version", [1, 2])
+def test_zero_row_nested_columns(tmp_path, monkeypatch, page_version):
+    """A zero-row file of list / map / struct columns reads back; so does
+    one whose 0-value v1 pages carry no level sections at all (the
+    writer emitted none for an empty level stream before)."""
+    t = pa.table({
+        "l": pa.array([], pa.list_(pa.int32())),
+        "m": pa.array([], pa.map_(pa.string(), pa.int64())),
+        "s": pa.array([], pa.struct([("a", pa.int32()),
+                                     ("b", pa.list_(pa.string()))])),
+    })
+    p = str(tmp_path / "empty.parquet")
+    pqwriter.write_table(t, p, page_version=page_version)
+    assert pq.read_table(p).num_rows == 0
+    assert P.decode_table(p).to_pylist() == []
+    emit = pqwriter._emit_data_page
+
+    def emit_without_empty_levels(out, codec_id, version, enc_id, n_ent,
+                                  n_rows, n_nulls, rep_raw, def_raw,
+                                  values, pc=None):
+        return emit(out, codec_id, version, enc_id, n_ent, n_rows,
+                    n_nulls, rep_raw or None, def_raw or None, values, pc)
+
+    monkeypatch.setattr(pqwriter, "_emit_data_page",
+                        emit_without_empty_levels)
+    old = str(tmp_path / "old.parquet")
+    pqwriter.write_table(t, old, page_version=page_version)
+    assert P.decode_table(old).to_pylist() == []
+
+
 def test_required_struct_of_required_leaves(tmp_path):
     """max_def 0 leaves under a required struct carry no definition
     levels at all (no level stream, no histograms)."""

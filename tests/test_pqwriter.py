@@ -449,6 +449,16 @@ def test_bloom_filters_parquet_mr_read_by_engine(spark, tmp_path):
         pf, "s", [f"w{i}" for i in range(500)]).mean() < 0.02
 
 
+def _zfilters(chunks, col, pred):
+    """``read_parquet_dir``'s conversion of one predicate tuple: Filters
+    over the column's storage values."""
+    from parquet_go_spark import prune
+
+    leaf = next(c.leaf_el for c in chunks if c.top_name == col)
+    return {col: [P.storage_filter(f, leaf)
+                  for f in prune.from_tuple(col, pred)]}
+
+
 def test_reader_prunes_row_groups(spark, tmp_path):
     """Footer stats + blooms prune (file, row-group) units driver-side;
     the exact predicate re-applies in Spark (advisory-lossless)."""
@@ -470,13 +480,16 @@ def test_reader_prunes_row_groups(spark, tmp_path):
 
     pf = os.path.join(d, "p.parquet")
     meta = PP.read_footer(pf)              # footer-only driver path
+    groups = PP.column_chunks(meta)
     kept = [g for g in range(4)
-            if S._rg_stats_keep(meta, g, "k", ("range", 35000, 35009))]
+            if S._rg_keep(pf, groups[g], _zfilters(
+                groups[g], "k", ("range", 35000, 35009)), probe=False)]
     assert kept == [3]
     # bloom prune: eq probe on a value in no row group is dropped by the
     # bloom even though stats overlap (tag strings interleave every rg)
     kept_b = [g for g in range(4)
-              if S._rg_bloom_keep(pf, meta, g, "tag", ("eq", "nope-1"))]
+              if S._rg_keep(pf, groups[g],
+                            _zfilters(groups[g], "tag", ("eq", "nope-1")))]
     assert kept_b == []
     df = S.read_parquet_dir(spark, d, filters={"k": ("range", 35000, 35009)})
     assert df.count() == 10
@@ -501,11 +514,11 @@ def test_bloom_prune_value_outside_physical_range(spark, tmp_path):
     os.makedirs(d)
     f = os.path.join(d, "p.parquet")
     W.write_table(tbl, f, bloom_columns=["k"], stats_omit=["k"])
-    meta = P.read_footer(f)
-    assert not S._rg_bloom_keep(f, meta, 0, "k", ("eq", 2**40))
-    assert not S._rg_bloom_keep(f, meta, 0, "k", ("eq", -2**31 - 1))
-    assert S._rg_bloom_keep(f, meta, 0, "k", ("eq", 17))
-    assert S._rg_bloom_keep(f, meta, 0, "k", ("in", [2**40, 17]))
+    rg = P.column_chunks(P.read_footer(f))[0]
+    assert not S._rg_keep(f, rg, _zfilters(rg, "k", ("eq", 2**40)))
+    assert not S._rg_keep(f, rg, _zfilters(rg, "k", ("eq", -2**31 - 1)))
+    assert S._rg_keep(f, rg, _zfilters(rg, "k", ("eq", 17)))
+    assert S._rg_keep(f, rg, _zfilters(rg, "k", ("in", [2**40, 17])))
     assert S.read_parquet_dir(
         spark, d, filters={"k": ("eq", 2**40)}).count() == 0
     assert S.read_parquet_dir(

@@ -8,8 +8,21 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql.datasource import (
+    EqualNullSafe,
+    EqualTo,
+    GreaterThan,
+    GreaterThanOrEqual,
+    In,
+    IsNotNull,
+    IsNull,
+    LessThan,
+    LessThanOrEqual,
+    StringStartsWith,
+)
 
 from parquet_go_spark import chunk
 
@@ -65,6 +78,102 @@ def test_float64_any(vals):
     _roundtrip(pa.array(vals, type=pa.float64()))
 
 
+def _spark_key(x):
+    """Spark's float order: NaN equals NaN and is greatest, ±inf are
+    ordinary values."""
+    return (1, 0.0) if isinstance(x, float) and x != x else (0, x)
+
+
+def _matches(x, f) -> bool:
+    """Does a row holding ``x`` (None = SQL NULL) satisfy ``f`` under
+    Spark semantics?"""
+    if isinstance(f, IsNull) or (
+            isinstance(f, EqualNullSafe) and f.value is None):
+        return x is None
+    if x is None:
+        return False
+    if isinstance(f, IsNotNull):
+        return True
+    if isinstance(f, StringStartsWith):
+        return x.startswith(f.value)
+    k = _spark_key(x)
+    if isinstance(f, In):
+        return any(k == _spark_key(v) for v in f.value if v is not None)
+    v = _spark_key(f.value)
+    if isinstance(f, (EqualTo, EqualNullSafe)):
+        return k == v
+    if isinstance(f, GreaterThan):
+        return k > v
+    if isinstance(f, GreaterThanOrEqual):
+        return k >= v
+    if isinstance(f, LessThan):
+        return k < v
+    return k <= v
+
+
+def _assert_zones_one_sided(vals: list, typ: pa.DataType, f) -> None:
+    """Write ``vals`` as a column every way the engine prunes it — a
+    paged PGS chunk (bounds rendered as the manifest strings the encode
+    job writes), a pyarrow file and an engine-written file (row-group
+    stats, ColumnIndex pages, dictionaries, blooms) — and check that
+    every zone the pruning rules drop holds no row matching ``f``."""
+    import json
+    import os
+    import tempfile
+
+    import pyarrow.parquet as pq
+
+    from parquet_go_spark import pqinterop as P
+    from parquet_go_spark import pqwriter
+    from parquet_go_spark.operators.encode_job import _pages_json
+    from parquet_go_spark.operators.parquet_sink import _rg_keep
+    from parquet_go_spark.sources.pgs_datasource import _manifest_keep
+
+    arr = pa.array(vals, type=typ)
+
+    def assert_none_match(lo, hi, where):
+        bad = [x for x in vals[lo:hi] if _matches(x, f)]
+        assert not bad, f"{where} rows {lo}:{hi} dropped by {f}: {bad}"
+
+    _, stats = chunk.encode_chunk_paged(arr, page_rows=4)
+    whole = json.loads(_pages_json([{
+        "first_row": 0, "count": len(vals),
+        "vmin": stats.get("min"), "vmax": stats.get("max")}]))[0]
+    if not _manifest_keep(f, whole["lo"], whole["hi"],
+                          stats["null_count"], stats["count"]):
+        assert_none_match(0, len(vals), "pgs chunk")
+    for p in json.loads(_pages_json(stats["pages"])):
+        if not _manifest_keep(f, p["lo"], p["hi"]):
+            assert_none_match(p["r"], p["r"] + p["n"], "pgs page")
+
+    tbl = pa.table({"c": arr})
+    bloom = pa.types.is_integer(typ) or pa.types.is_string(typ)
+    with tempfile.TemporaryDirectory() as d:
+        files = {"pyarrow": os.path.join(d, "pa.parquet"),
+                 "engine": os.path.join(d, "engine.parquet")}
+        pq.write_table(tbl, files["pyarrow"], row_group_size=8,
+                       data_page_size=1, write_batch_size=4,
+                       write_page_index=True)
+        pqwriter.write_table(tbl, files["engine"], row_group_rows=8,
+                             page_rows=4,
+                             bloom_columns=["c"] if bloom else None)
+        for who, path in files.items():
+            meta = P.read_footer(path)
+            start = 0
+            for g, chunks in enumerate(P.column_chunks(meta)):
+                n = meta[4][g][3]
+                zf = {"c": [P.storage_filter(f, chunks[0].leaf_el)]}
+                if not _rg_keep(path, chunks, zf):
+                    assert_none_match(start, start + n, f"{who} rg {g}")
+                ranges, pruned = P.page_row_ranges(path, chunks, zf)
+                if pruned:
+                    kept = {i for lo, hi in ranges for i in range(lo, hi)}
+                    for i in set(range(n)) - kept:
+                        assert_none_match(start + i, start + i + 1,
+                                          f"{who} rg {g} page")
+                start += n
+
+
 @given(
     st.lists(
         st.one_of(
@@ -79,49 +188,63 @@ def test_float64_any(vals):
 )
 @settings(**_SETTINGS)
 def test_float_stats_pruning_lossless(vals, fval, op):
-    """If _stats_keep says prune, NO row of the chunk may satisfy the
-    filter under engine float semantics (NaN greatest, NaN = NaN true,
-    ±inf in-band) — bounds folded by encode_chunk, compared through the
-    same string render the manifest uses."""
-    from pyspark.sql.datasource import (
-        EqualTo,
-        GreaterThan,
-        GreaterThanOrEqual,
-        In,
-        LessThan,
-        LessThanOrEqual,
-    )
-
-    from parquet_go_spark.sources.pgs_datasource import _stats_keep
-
-    _, stats = chunk.encode_chunk(pa.array(vals, type=pa.float64()))
-    vmin, vmax = stats.get("min"), stats.get("max")
-    smin = "" if vmin is None else str(vmin)
-    smax = "" if vmax is None else str(vmax)
+    """If a pruning rule drops a zone, NO row of it may satisfy the
+    filter under Spark float semantics (NaN greatest, NaN = NaN true,
+    ±inf in-band): PGS bounds folded by the chunk encoder with NaN
+    inside, parquet bounds with NaN left out."""
     fcls = {
         "eq": EqualTo, "gt": GreaterThan, "ge": GreaterThanOrEqual,
         "lt": LessThan, "le": LessThanOrEqual, "in": In,
     }[op]
     f = fcls(("c",), (fval, 0.25) if op == "in" else fval)
+    _assert_zones_one_sided(vals, pa.float64(), f)
 
-    def k(x):  # the engine total order: NaN greatest
-        return (1, 0.0) if x != x else (0, x)
 
-    def matches(x):  # Spark filter semantics on a non-null row
-        if op == "eq":
-            return k(x) == k(fval)
-        if op == "gt":
-            return k(x) > k(fval)
-        if op == "ge":
-            return k(x) >= k(fval)
-        if op == "lt":
-            return k(x) < k(fval)
-        if op == "le":
-            return k(x) <= k(fval)
-        return k(x) in (k(fval), k(0.25))
+_COLUMNS = {
+    "int": (pa.int64(), st.one_of(
+        st.integers(-40, 40), st.integers(-(2**63), 2**63 - 1))),
+    "string": (pa.string(), st.one_of(
+        st.text(max_size=6),
+        st.text(min_size=60, max_size=120),     # truncated bounds
+        st.sampled_from(["", "a", "ab", "b\u00e9", "\U0001f600"]))),
+    "decimal": (pa.decimal128(12, 2), st.decimals(
+        -10**6, 10**6, places=2)),
+}
 
-    if not _stats_keep(smin, smax, f):
-        assert not any(matches(v) for v in vals if v is not None)
+
+def _filters(kind: str, value):
+    """Random Spark Filters on column ``c``; decimal filter values may be
+    finer than the column's scale."""
+    if kind == "decimal":
+        value = st.one_of(value, st.decimals(-10**6, 10**6, places=3))
+    ops = [EqualTo, EqualNullSafe, GreaterThan, GreaterThanOrEqual,
+           LessThan, LessThanOrEqual]
+    out = [st.builds(op, st.just(("c",)), value) for op in ops]
+    out += [
+        st.builds(EqualNullSafe, st.just(("c",)), st.none()),
+        st.builds(In, st.just(("c",)), st.lists(
+            st.one_of(st.none(), value), min_size=1, max_size=4
+        ).map(tuple)),
+        st.just(IsNull(("c",))),
+        st.just(IsNotNull(("c",))),
+    ]
+    if kind == "string":
+        out.append(st.builds(StringStartsWith, st.just(("c",)),
+                             st.text(min_size=1, max_size=3)))
+    return st.one_of(out)
+
+
+@pytest.mark.parametrize("kind", sorted(_COLUMNS))
+@given(data=st.data())
+@settings(**_SETTINGS)
+def test_zone_pruning_lossless(kind, data):
+    """The one-sided guarantee of ``prune.keep`` on int, string (unicode,
+    bounds truncated past 64 bytes) and decimal columns with nulls, for
+    every zone of both stores: a dropped zone holds no matching row."""
+    typ, value = _COLUMNS[kind]
+    vals = data.draw(st.lists(st.one_of(st.none(), value),
+                              min_size=1, max_size=40))
+    _assert_zones_one_sided(vals, typ, data.draw(_filters(kind, value)))
 
 
 @given(

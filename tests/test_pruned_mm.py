@@ -5,6 +5,9 @@ from __future__ import annotations
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.datasource import In
+
+from parquet_go_spark.sources.pgs_datasource import _candidate_parts
 
 SF = "/root/testdata/sf0.001"
 
@@ -19,7 +22,8 @@ def test_stats_pruning_prunes_and_is_exact(spark, tmp_out):
     )
     total_parts = store.completed_partitions(spark).count()
     lo, hi = 1_000, 5_000
-    cand = pruned.stats_candidates(spark, store, "o_orderkey", lo, hi)
+    cand = _candidate_parts(store.out_dir, pruned._between("o_orderkey",
+                                                           lo, hi))
     assert 0 < len(cand) < total_parts, "range clustering must prune"
     cols = df.columns
     schema, atypes = pruned._schema_of(df, cols)
@@ -49,9 +53,11 @@ def test_zorder_clustering_prunes_both_dimensions(spark, tmp_out):
     assert store.meta()["zorder_cols"] == ["o_orderkey", "o_custkey"]
     total = store.completed_partitions(spark).count()
     klo, khi, clo, chi = 100, 300, 10, 40
-    # auto_candidates routes to stats for ANY recorded zorder column
-    ca = pruned.auto_candidates(spark, store, "o_orderkey", klo, khi)
-    cb = pruned.auto_candidates(spark, store, "o_custkey", clo, chi)
+    # manifest stats prune on ANY zorder column
+    ca = _candidate_parts(store.out_dir,
+                          pruned._between("o_orderkey", klo, khi))
+    cb = _candidate_parts(store.out_dir,
+                          pruned._between("o_custkey", clo, chi))
     assert 0 < len(ca) < total, "zorder must prune on the first column"
     assert 0 < len(cb) < total, "zorder must prune on the second column"
     cand = sorted(set(ca) & set(cb))
@@ -75,7 +81,7 @@ def test_bloom_pruning_no_false_negatives(spark, tmp_out):
         num_parts=16, bloom_cols={"o_custkey"},
     )
     keys = [7, 13, 42]
-    cand = pruned.bloom_candidates(spark, store, "o_custkey", keys)
+    cand = _candidate_parts(store.out_dir, [In(("o_custkey",), tuple(keys))])
     cols = df.columns
     schema, atypes = pruned._schema_of(df, cols)
     dec = pruned._decode_parts(spark, store, cand, cols, schema, atypes)
@@ -289,7 +295,7 @@ def test_stats_pruning_string_key(spark, tmp_out):
         num_parts=8,
     )
     lo, hi = "b", "f"
-    cand = pruned.stats_candidates(spark, store, "p_name", lo, hi)
+    cand = _candidate_parts(store.out_dir, pruned._between("p_name", lo, hi))
     total = store.completed_partitions(spark).count()
     assert 0 < len(cand) <= total
     schema, atypes = pruned._schema_of(df, df.columns)
@@ -397,9 +403,9 @@ def test_page_index_point_lookup_decodes_one_page(spark, tmp_out):
 
 
 def test_auto_candidates_needs_no_caller_clustering(spark, tmp_out, tmp_path):
-    """Pruning strategy comes from the store's recorded metadata: the same
-    auto_candidates call prunes by stats on a range store and by bloom on
-    a hash store."""
+    """The caller never says how a store was clustered: the same
+    ``_candidate_parts`` call prunes a range store by stats and stays
+    exact on a hash store with blooms."""
     from parquet_go_spark.operators import pruned
 
     df = spark.read.parquet(f"{SF}/orders.parquet")
@@ -408,9 +414,8 @@ def test_auto_candidates_needs_no_caller_clustering(spark, tmp_out, tmp_path):
         num_parts=16,
     )
     total = range_store.completed_partitions(spark).count()
-    cand = pruned.auto_candidates(
-        spark, range_store, "o_orderkey", 1_000, 5_000
-    )
+    cand = _candidate_parts(range_store.out_dir,
+                            pruned._between("o_orderkey", 1_000, 5_000))
     assert 0 < len(cand) < total
 
     hash_dir = str(tmp_path / "hash_store")
@@ -418,9 +423,8 @@ def test_auto_candidates_needs_no_caller_clustering(spark, tmp_out, tmp_path):
         spark, df, hash_dir, key_col="o_custkey", clustering="hash",
         num_parts=16, bloom_cols={"o_custkey"},
     )
-    cand2 = pruned.auto_candidates(
-        spark, hash_store, "o_custkey", keys=[7, 13]
-    )
+    cand2 = _candidate_parts(hash_store.out_dir,
+                             [In(("o_custkey",), (7, 13))])
     got = (
         pruned._decode_parts(
             spark, hash_store, cand2, df.columns,

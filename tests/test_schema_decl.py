@@ -357,3 +357,36 @@ def test_geo_logical_declarations_roundtrip(tmp_path):
         render_json_schema(decl.schema, decl.logical_types))
     assert again.schema == decl.schema
     assert again.logical_types == decl.logical_types
+
+
+def test_nested_logical_types_reach_the_file(tmp_path):
+    """``logicaltype=`` on a LIST element, MAP key/value or struct member
+    becomes ``pgs_logical`` field metadata, which the writer turns into
+    the annotation on that leaf."""
+    import uuid
+
+    decl = parse_json_schema(
+        '{"Tag": "name=r", "Fields": ['
+        '{"Tag": "name=ids, type=LIST", "Fields": [{"Tag": "name=element, '
+        'type=FIXED_LEN_BYTE_ARRAY, length=16, logicaltype=UUID"}]},'
+        '{"Tag": "name=m, type=MAP", "Fields": ['
+        '{"Tag": "name=key, type=FIXED_LEN_BYTE_ARRAY, length=16, '
+        'logicaltype=UUID, repetitiontype=REQUIRED"},'
+        '{"Tag": "name=value, type=BYTE_ARRAY, logicaltype=JSON"}]},'
+        '{"Tag": "name=st", "Fields": [{"Tag": "name=u, '
+        'type=FIXED_LEN_BYTE_ARRAY, length=16, logicaltype=UUID"}]}]}')
+    assert decl.logical_types == {}
+    elem = decl.schema.field("ids").type.value_field
+    assert elem.metadata == {b"pgs_logical": b"uuid"}
+    u = uuid.UUID(int=7).bytes
+    t = pa.table({"ids": [[u, u], None], "m": [[(u, '{"a": 1}')], []],
+                  "st": [{"u": u}, None]}, schema=decl.schema)
+    p = str(tmp_path / "decl.parquet")
+    W.write_table(t, p, **decl.writer_kwargs())
+    sch = pq.ParquetFile(p).schema
+    logical = {sch.column(i).path: sch.column(i).logical_type.type
+               for i in range(len(sch))}
+    assert logical == {"ids.list.element": "UUID",
+                       "m.key_value.key": "UUID",
+                       "m.key_value.value": "JSON", "st.u": "UUID"}
+    assert P.decode_table(p).to_pylist() == t.to_pylist()

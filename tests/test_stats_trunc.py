@@ -54,3 +54,15 @@ def test_bounds_wrapper_long_text():
     out_min, out_max = truncate_bounds(lo, hi, limit=16)
     assert len(out_min.encode()) <= 16
     assert out_min <= lo and out_max >= hi
+
+
+def test_bounds_cover_characters_split_at_the_limit():
+    """A limit that splits a multi-byte character must still give string
+    bounds that enclose the value: the min cuts before the character,
+    the max rounds the last whole character up."""
+    for v in ("0" * 53 + "\x80" * 6 + "0", "a" * 63 + "\U0001f600" * 3,
+              "é" * 40, "\U0010ffff" * 30):
+        lo, hi = truncate_bounds(v, v)
+        assert lo <= v <= hi, v
+        assert lo.encode() <= v.encode() <= hi.encode(), v
+        assert "�" not in lo + hi
