@@ -1,29 +1,40 @@
-"""The Spark encode pipeline: plan -> salt -> applyInArrow encode -> commit.
+"""The Spark encode pipeline: scan -> cut -> encode -> commit, in one stage.
 
-Analog of the reference write path (SURVEY.md §3.1,
-/root/reference/writer/ops.go:129-281): one Spark partition = one row group;
-the applyInArrow kernel is steps 3.1.4-3.1.5 (encode to pages, emit chunk
+Analog of the reference write path (SURVEY.md §3.1, reference
+writer/ops.go:129-281): one part = one row group; the encode kernel
+(``make_encode_fn``) is steps 3.1.4-3.1.5 (encode to pages, emit chunk
 metadata); the parquet/Iceberg commit is the footer write.
 
-Plan shape at scale: the only shuffle is one hash repartition on part_id
-into min(planned groups, cores) partitions, which groupBy -> applyInArrow
-reuses and AQE leaves alone, so the encode stage runs one task per core;
-everything upstream is a narrow scan and everything downstream is a file
-write. Skew is handled by the partition planner, not by oversized tasks.
+Plan shape of ``encode_table``: the input is narrowed with ``coalesce``
+(never a shuffle) to at most ``defaultParallelism`` tasks, and one
+``mapInArrow`` walks each task's rows in order, closing a part as soon
+as its n_tok sum reaches the target, encoding it in place and handing
+its blob rows to the file write. There is no planner job and no
+Exchange: a part holds at most target + one row's tokens by
+construction, so the heavy tail never concentrates in one part.
+
+``encode_blobs_df`` is the other entry: it encodes rows whose ``part_id``
+a caller already assigned (hash co-location for ``partspec`` routing,
+``pruned``'s key-clustered layouts, stream ingest), behind one hash
+repartition on part_id into min(groups, cores) partitions.
 """
 
 from __future__ import annotations
 
+import glob
 import json
-import math
-from typing import Iterable
+import os
+from dataclasses import dataclass
+from typing import Iterable, Iterator
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import chunk, frame as framemod, geo as geomod, keys as keysmod, stats_trunc
-from ..plans.partitioner import DEFAULT_TARGET_TOKENS, plan_partitions
+from ..plans.partitioner import DEFAULT_TARGET_TOKENS
 from .store import BLOB_SCHEMA, ManifestStore
 
 
@@ -250,6 +261,128 @@ def encode_blobs_df(
     )
 
 
+@dataclass
+class EncodePlan:
+    """What ``encode_table`` left in the store: its part count (parts
+    this call wrote plus those of the waves a resume kept)."""
+
+    num_partitions: int
+
+
+# the keys encode_table records in the store meta; a meta with any other
+# key (or another clustering) was made or changed by another writer
+_OWN_META = {
+    "key_col", "clustering", "num_parts", "waves", "page_rows", "sort_cols",
+    "bloom_cols", "schema_json", "encrypted", "aad_bound", "column_key_cols",
+    "ndv_cols",
+}
+
+
+def _cut_groups(batches: Iterable[pa.RecordBatch],
+                target_tokens: int) -> Iterator[list[pa.RecordBatch]]:
+    """The rows of ``batches``, in order, as groups of batch slices. A
+    group closes as soon as its n_tok sum reaches ``target_tokens``, so
+    it holds less than target + one row's tokens (null n_tok counts 0)."""
+    pending, acc = [], 0
+    for b in batches:
+        n = pc.fill_null(b.column("n_tok"), 0).to_numpy(zero_copy_only=False)
+        cum = np.cumsum(np.maximum(n, 0), dtype=np.int64)
+        start = 0
+        while start < b.num_rows:
+            base = int(cum[start - 1]) if start else 0
+            # first row whose running sum reaches the target closes it
+            end = int(np.searchsorted(cum, base + target_tokens - acc)) + 1
+            if end > b.num_rows:
+                pending.append(b.slice(start))
+                acc += int(cum[-1]) - base
+                break
+            pending.append(b.slice(start, end - start))
+            yield pending
+            pending, acc = [], 0
+            start = end
+    if pending:
+        yield pending
+
+
+def scan_blobs_df(
+    df: DataFrame,
+    target_tokens: int,
+    wave: int = 0,
+    waves: int = 1,
+    parts=None,
+    **encode_kw,
+) -> DataFrame:
+    """df -> blob rows DataFrame (lazy), cut and encoded inside the
+    input's own scan tasks (module doc); no Exchange.
+
+    Only rows with ``pmod(xxhash64(doc_id), waves) == wave`` are encoded.
+    Group ``k`` of task ``t`` gets part id ``(k * cores + t) * waves +
+    wave``: unique within the wave, disjoint from every other wave's.
+    ``parts`` is an optional accumulator that counts the groups."""
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    if waves > 1:
+        df = df.filter(F.pmod(F.xxhash64("doc_id"), F.lit(waves)) == wave)
+    encode_group = make_encode_fn(**encode_kw)
+
+    def encode_task(batches):
+        from pyspark import TaskContext
+
+        task = TaskContext.get().partitionId()
+        k = -1
+        for k, group in enumerate(_cut_groups(batches, target_tokens)):
+            t = pa.Table.from_batches(group)
+            pid = pa.scalar((k * cores + task) * waves + wave, pa.int32())
+            yield from encode_group(
+                t.append_column("part_id", pa.repeat(pid, t.num_rows))
+            ).to_batches()
+        if parts is not None:
+            parts.add(k + 1)
+
+    return df.coalesce(cores).mapInArrow(encode_task, BLOB_SCHEMA)
+
+
+def _resume(df: DataFrame, store: ManifestStore, meta: dict,
+            waves: int) -> dict[int, int]:
+    """Waves already committed in full -> their part count. A wave whose
+    committed doc_id rows differ in number from its input rows has its
+    blob files deleted, to be encoded again. A store without a recorded
+    wave count (written before it was recorded) is checked as one unit."""
+    import pyarrow.parquet as pq
+
+    unit = meta.get("waves")
+    if unit is not None and unit != waves:
+        raise ValueError(
+            f"{store.out_dir} was encoded with waves={unit}; resume it "
+            f"with the same waves or pass resume=False")
+    m = unit or 1
+    want = dict(df.groupBy(
+        F.pmod(F.xxhash64("doc_id"), F.lit(m))).count().collect())
+    rows, parts, files = {}, {}, {}
+    for f in glob.glob(os.path.join(store.blobs_dir, "*.parquet")):
+        t = pq.read_table(f, columns=["part_id", "col", "count"]).to_pydict()
+        files[f] = {pid % m for pid in t["part_id"]}
+        for pid, col, n in zip(t["part_id"], t["col"], t["count"]):
+            if col == "doc_id":
+                w = pid % m
+                rows[w] = rows.get(w, 0) + n
+                parts[w] = parts.get(w, 0) + 1
+    redo = {w for w in set(want) | set(rows)
+            if want.get(w, 0) != rows.get(w, 0)}
+    # a file holding parts of a wave to redo takes all its waves along
+    while True:
+        drop = [f for f, ws in files.items() if ws & redo]
+        more = set().union(*(files[f] for f in drop)) - redo
+        if not more:
+            break
+        redo |= more
+    for f in drop:
+        os.remove(f)
+    if unit is None:
+        return {} if redo else {**dict.fromkeys(range(waves), 0),
+                                0: sum(parts.values())}
+    return {w: parts.get(w, 0) for w in range(waves) if w not in redo}
+
+
 def encode_table(
     spark: SparkSession,
     df: DataFrame,
@@ -269,6 +402,11 @@ def encode_table(
     ndv_cols: set[str] | None = None,
 ):
     """Encode ``df`` into ``out_dir`` with checkpointed resumability.
+    Returns ``(store, EncodePlan)``.
+
+    Each scan task cuts its rows into parts at a running sum of
+    ``target_tokens`` n_tok (module doc), so a part holds at most
+    target + the largest row's tokens.
 
     ``encryption_key`` seals every chunk with AES-GCM modular encryption
     (reference reader/encryption.go analog): manifest metadata stays
@@ -278,10 +416,17 @@ def encode_table(
     ``encryption_key`` or plaintext. Paths are validated against the
     schema before any byte is written.
 
-    ``waves > 1`` splits the partition range into that many commit units —
-    each wave is one atomic Spark write, so a crash loses at most one wave
-    and a rerun anti-joins the committed manifest and encodes only the rest
-    (FIXTURES.md F6 semantics).
+    ``waves > 1`` splits the rows into that many commit units: wave
+    ``w`` is the rows with ``pmod(xxhash64(doc_id), waves) == w``, and
+    its part ids are the ones with ``part_id % waves == w``. Each wave is
+    one atomic Spark write, so a crash loses at most one wave. The store
+    meta (with the wave count) is written before the first wave. A rerun
+    with ``resume`` compares each wave's committed doc_id rows with its
+    input rows: a complete wave is skipped, a partial one has its blob
+    files deleted and is encoded again (FIXTURES.md F6 semantics). The
+    unit does not depend on Spark's input splits, so a rerun may use
+    other split sizes or another core count. A store whose meta says
+    another writer made or changed it raises ValueError.
 
     ``codec_map`` / ``bloom_cols`` are the per-column knob surface — the
     analog of the reference's struct-tag encoding/bloomfilter options
@@ -291,29 +436,22 @@ def encode_table(
     column whose chunks carry blooms, whichever writer built them.
     """
     keysmod.validate_column_keys(column_keys, df.columns)
+    if target_tokens < 1:
+        raise ValueError(f"target_tokens must be >= 1, got {target_tokens}")
+    waves = max(waves, 1)
     store = ManifestStore(out_dir)
-    planned, plan = plan_partitions(df, target_tokens=target_tokens)
-    pending = store.pending(spark, planned) if resume and store.exists() else planned
-    # each wave encodes part ids [lo, lo + per); one wave needs no filter
-    per = math.ceil(plan.num_partitions / max(waves, 1))
-    for lo in range(0, plan.num_partitions, per):
-        hi = min(lo + per, plan.num_partitions)
-        wave_df = pending if waves <= 1 else pending.filter(
-            (F.col("part_id") >= lo) & (F.col("part_id") < hi)
-        )
-        store.append_blobs(
-            encode_blobs_df(wave_df, compression, codec,
-                            num_partitions=hi - lo,
-                            codec_map=codec_map, bloom_cols=bloom_cols,
-                            page_rows=page_rows,
-                            encryption_key=encryption_key,
-                            column_keys=column_keys,
-                            aad_prefix=aad_prefix, ndv_cols=ndv_cols)
-        )
-    store.write_meta(
-        key_col=None, clustering="token_weighted",
-        num_parts=plan.num_partitions, page_rows=page_rows,
-        sort_cols=sort_cols or [],
+    old = store.meta()
+    if old and (old.get("clustering") != "token_weighted"
+                or set(old) - _OWN_META):
+        raise ValueError(
+            f"{out_dir} holds a store another writer made or changed "
+            f"(clustering={old.get('clustering')!r}); encode_table only "
+            "resumes its own stores")
+    done = _resume(df, store, old, waves) \
+        if resume and store.exists() else {}
+    meta = dict(
+        key_col=None, clustering="token_weighted", num_parts=0, waves=waves,
+        page_rows=page_rows, sort_cols=sort_cols or [],
         bloom_cols=sorted(bloom_cols) if bloom_cols else [],
         # makes the store self-describing for format("pgs") reads
         schema_json=df.schema.jsonValue(),
@@ -326,4 +464,17 @@ def encode_table(
         column_key_cols=sorted(column_keys) if column_keys else [],
         ndv_cols=sorted(ndv_cols) if ndv_cols else [],
     )
-    return store, plan
+    store.write_meta(**meta)
+    parts = spark.sparkContext.accumulator(0)
+    for w in range(waves):
+        if w in done:
+            continue
+        store.append_blobs(scan_blobs_df(
+            df, target_tokens, w, waves, parts,
+            compression=compression, codec=codec, codec_map=codec_map,
+            bloom_cols=bloom_cols, page_rows=page_rows,
+            encryption_key=encryption_key, column_keys=column_keys,
+            aad_prefix=aad_prefix, ndv_cols=ndv_cols))
+    num = parts.value + sum(done.values())
+    store.write_meta(**{**meta, "num_parts": num})
+    return store, EncodePlan(num)

@@ -330,14 +330,14 @@ FROM customer
 
 # -------------------------------------------------------- engine reader
 
-def _rg_bbox_keep(meta: dict, gi: int, col: str, pred: tuple) -> bool:
+def _rg_bbox_keep(chunks: list, col: str, pred: tuple) -> bool:
     """GeospatialStatistics (ColumnMetaData 17; reference
-    internal/layout/chunk.go:124-173) pruning of one row group: drop the
-    unit only when the folded bbox PROVES no geometry intersects the
-    ``("bbox", xmin, ymin, xmax, ymax)`` window."""
-    bb = next((cc[3] for cc in meta[4][gi][1]
-               if b".".join(cc[3][3]).decode().split(".")[0] == col),
-              {}).get(17, {}).get(1)
+    internal/layout/chunk.go:124-173) pruning of the row group whose
+    column chunk infos are ``chunks``: drop the unit only when the folded
+    bbox PROVES no geometry intersects the ``("bbox", xmin, ymin, xmax,
+    ymax)`` window. A chunk the reader holds no key for keeps."""
+    cc = next((c for c in chunks if c.name.split(".")[0] == col), None)
+    bb = (cc.geo_stats or {}).get(1) if cc is not None else None
     if not bb:
         return True
     xmin, xmax = bb.get(1), bb.get(2)
@@ -460,12 +460,13 @@ def read_parquet_dir(
 
     def _file_units(f):
         meta, ctx = footers[f]
-        groups = pqinterop.column_chunks(meta, ctx) if zfilters else None
+        if not (zfilters or bboxes):
+            return [(f, g) for g in range(len(meta[4]))]
         return [
-            (f, g) for g in range(len(meta[4]))
-            if all(_rg_bbox_keep(meta, g, c, p) for c, p in bboxes.items())
-            and (groups is None or _rg_keep(f, groups[g], zfilters,
-                                            probe=decryption is None))
+            (f, g) for g, chunks in enumerate(
+                pqinterop.column_chunks(meta, ctx))
+            if all(_rg_bbox_keep(chunks, c, p) for c, p in bboxes.items())
+            and _rg_keep(f, chunks, zfilters, probe=decryption is None)
         ]
 
     units = []

@@ -20,7 +20,16 @@ The reference is single-process and has no partitioning layer (SURVEY.md
     window is ~2M skinny rows at 10^12 tokens, not a data-scale sort.
 
 The resulting part_id is stable across runs (pure function of doc_id
-hashes and n_tok), which checkpointed resume requires.
+hashes and n_tok).
+
+Callers: ``encode_table`` does not plan; it cuts parts at a running n_tok
+sum inside its scan tasks, which gives the same target + max_doc bound
+with no planner job and no shuffle (operators/encode_job.py). This
+planner stays for a caller that wants hash-salted part ids before the
+encode, fed to ``encode_blobs_df``; today that is perfbench's traced
+layer split. ``partspec``, ``pruned`` and stream ingest assign their own
+co-located part ids and call ``encode_blobs_df`` directly.
+``DEFAULT_TARGET_TOKENS`` is the target both paths default to.
 """
 
 from __future__ import annotations

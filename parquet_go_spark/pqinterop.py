@@ -196,6 +196,7 @@ class ColumnChunkInfo:
     data_page_offset: int = 0         # ColumnMetaData field 9
     enc_stats: list | None = None     # ColumnMetaData.encoding_stats
     stats: dict | None = None         # ColumnMetaData.statistics
+    geo_stats: dict | None = None     # ColumnMetaData 17 (bbox, types)
     leaf_el: dict | None = None       # SchemaElement of the leaf
     crc_mode: str | None = None       # per-read override of CRC_MODE
 
@@ -464,7 +465,7 @@ def column_chunks(meta: dict, ctx=None,
                 oi_off=cc.get(4), oi_len=cc.get(5),
                 ci_off=cc.get(6), ci_len=cc.get(7),
                 data_page_offset=md[9], enc_stats=md.get(13),
-                stats=md.get(12),
+                stats=md.get(12), geo_stats=md.get(17),
                 leaf_el=li.leaf_el, crc_mode=crc_mode,
             ))
         groups.append(cols)

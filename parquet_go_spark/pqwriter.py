@@ -1461,7 +1461,7 @@ def write_table(table: pa.Table, path: str, compression: str = "snappy",
                 stats: bool = True,
                 bloom_columns: list[str] | None = None,
                 page_version: int = 1,
-                int96_timestamps: bool = False,
+                int96_timestamps: "bool | set[str]" = False,
                 encryption=None, page_index: bool = True,
                 sorting_columns: list | None = None,
                 row_group_bytes: int | None = None,
@@ -1477,6 +1477,9 @@ def write_table(table: pa.Table, path: str, compression: str = "snappy",
     fixed_size_binary(16), json/enum = string, bson = binary,
     interval = fixed_size_binary(12)); equivalent to tagging the field
     metadata key ``pgs_logical``.
+
+    ``int96_timestamps``: True stores every top-level timestamp column
+    as legacy physical INT96, a set of names only those columns.
 
     ``stats_omit``: per-column Statistics suppression (the reference's
     ``omitstats=true`` field tag — large array fields whose bounds are
@@ -1555,7 +1558,8 @@ def write_table(table: pa.Table, path: str, compression: str = "snappy",
 
         i96_cols = set()
         for i, f in enumerate(table.schema):
-            if pa.types.is_timestamp(f.type):
+            if pa.types.is_timestamp(f.type) and (
+                    int96_timestamps is True or f.name in int96_timestamps):
                 conv = i96mod.timestamps_to_int96(
                     table.column(i).combine_chunks())
                 table = table.set_column(

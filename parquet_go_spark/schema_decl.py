@@ -53,6 +53,7 @@ class SchemaDecl:
     stats_omit: set[str] = field(default_factory=set)
     bloom_columns: list[str] = field(default_factory=list)
     bloom_sizes: dict[str, int] = field(default_factory=dict)
+    int96_columns: set[str] = field(default_factory=set)
 
     def writer_kwargs(self) -> dict:
         kw: dict = {}
@@ -68,6 +69,8 @@ class SchemaDecl:
             kw["bloom_columns"] = list(self.bloom_columns)
         if self.bloom_sizes:
             kw["bloom_sizes"] = dict(self.bloom_sizes)
+        if self.int96_columns:
+            kw["int96_timestamps"] = set(self.int96_columns)
         return kw
 
 
@@ -264,6 +267,8 @@ def _field_of(item: dict, decl: SchemaDecl, top: bool) -> pa.Field:
             md = None
     if top:
         _collect_options(name, t, decl)
+        if ptype == "INT96":
+            decl.int96_columns.add(name)
     else:
         # the writer keys these options by top-level column: on a LIST
         # element, MAP key/value or struct member they would vanish

@@ -912,10 +912,24 @@ def _coerce(bound: str, like):
     """Parse a manifest bound string into the filter value's domain; None
     means "cannot compare -> do not prune" (invalid-stats defense,
     reader/index.go:65-87)."""
+    import datetime as _dt
+
     if not bound or isinstance(like, bool):
         return None  # str(True) doesn't order; booleans never prune
     if isinstance(like, str):
         return bound
+    if isinstance(like, _dt.date):
+        # dates are stored as epoch days, timestamps as epoch micros
+        # (UTC for a zoned value, wall clock for a naive one)
+        try:
+            n = int(bound)
+            if not isinstance(like, _dt.datetime):
+                return _dt.date(1970, 1, 1) + _dt.timedelta(days=n)
+            zone = _dt.timezone.utc if like.tzinfo else None
+            epoch = _dt.datetime(1970, 1, 1, tzinfo=zone)
+            return epoch + _dt.timedelta(microseconds=n)
+        except (ValueError, OverflowError):
+            return None
     parsers = {int: (int, float), float: (float,)}.get(type(like), ())
     for parse in parsers:
         try:

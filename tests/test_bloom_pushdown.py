@@ -42,7 +42,11 @@ from parquet_go_spark.sources.synth import token_sequences
 
 
 def _encode(spark, out, seed, n_rows=1200, **kw):
-    src = token_sequences(spark, n_rows, seed=seed, partitions=2)
+    # encode_table cuts parts in input order; hash order within each
+    # input task spreads every part's doc_id bounds over its task's
+    # range, so stats keep partitions a bloom can drop
+    src = token_sequences(spark, n_rows, seed=seed, partitions=2) \
+        .sortWithinPartitions(F.xxhash64("doc_id"))
     encode_table(spark, src, out, target_tokens=60_000, resume=False, **kw)
 
 

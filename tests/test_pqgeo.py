@@ -40,8 +40,44 @@ def test_footer_carries_geo_stats_and_prunes(tmp_path):
     assert out.column("g").to_pylist() == t.column("g").to_pylist()
     # unit pruning: only the second row group intersects x in [300,400]
     pred = ("bbox", 300.0, 0.0, 400.0, 300.0)
-    keeps = [psk._rg_bbox_keep(meta, gi, "g", pred) for gi in range(4)]
+    keeps = [psk._rg_bbox_keep(chunks, "g", pred)
+             for chunks in pqinterop.column_chunks(meta)]
     assert keeps == [False, True, False, False]
+
+
+def test_bbox_pruning_beside_a_column_key(spark, tmp_path):
+    """Another column sealed with its own key: the geometry column's
+    bbox still prunes, read from the decrypted chunk infos. A geometry
+    chunk the reader holds no key for keeps its row group."""
+    from parquet_go_spark.pqcrypt import Decrypt, Encrypt
+
+    t, x, y = _points_table()
+    kf, kc = bytes(range(16)), bytes(range(16, 32))
+    d = tmp_path / "sealed"
+    d.mkdir()
+    p = str(d / "geo.parquet")
+    pqwriter.write_table(
+        t, p, row_group_rows=250, logical_types={"g": "geometry"},
+        encryption=Encrypt(footer_key=kf, column_keys={"k": (kc, b"")}))
+    pred = ("bbox", 300.0, 0.0, 400.0, 300.0)
+    full = Decrypt(footer_key=kf, column_keys={"k": kc})
+    meta, ctx = pqinterop.read_footer_ex(p, full)
+    assert [psk._rg_bbox_keep(chunks, "g", pred)
+            for chunks in pqinterop.column_chunks(meta, ctx)] \
+        == [False, True, False, False]
+    df = psk.read_parquet_dir(spark, str(d), columns=["k"],
+                              filters={"g": pred}, decryption=full)
+    assert sorted(r["k"] for r in df.collect()) == [
+        i for i in range(1000) if 300 <= x[i] <= 400 and y[i] <= 300]
+
+    # the geometry column sealed, its key not held: nothing prunes
+    pqwriter.write_table(
+        t, p, row_group_rows=250, logical_types={"g": "geometry"},
+        encryption=Encrypt(footer_key=kf, column_keys={"g": (kc, b"")}))
+    meta, ctx = pqinterop.read_footer_ex(p, Decrypt(footer_key=kf))
+    groups = pqinterop.column_chunks(meta, ctx)
+    assert [c.key_missing for c in groups[0]] == [False, True]
+    assert all(psk._rg_bbox_keep(chunks, "g", pred) for chunks in groups)
 
 
 def test_bbox_mask_exact_general_wkb():

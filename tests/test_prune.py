@@ -159,3 +159,51 @@ def test_stores_prune_alike(spark, tmp_path, seed):
             pred
         got = read_parquet_dir(spark, pq_dir, filters={col: pred})
         assert sorted(map(_key, got.collect())) == want, pred
+
+
+def test_pgs_date_and_timestamp_filters_prune(spark, tmp_path):
+    """Date and timestamp bounds are epoch days and micros in the
+    manifest: a pushed ``format("pgs")`` read prunes on them and returns
+    what ``df.filter`` does, for zoned and naive timestamps alike."""
+    import datetime as dt
+
+    register(spark)
+    rng = np.random.default_rng(3)
+    n = 400
+    day0 = dt.date(2019, 12, 1)
+    rows = []
+    for i, (k, s) in enumerate(zip(rng.integers(0, 120, n),
+                                   rng.integers(0, 86_400_000_000, n))):
+        d = day0 + dt.timedelta(days=int(k))
+        t = dt.datetime(d.year, d.month, d.day) + dt.timedelta(
+            microseconds=int(s))
+        rows.append((None if i % 29 == 0 else d, t, t))
+    df = spark.createDataFrame(rows, "d date, t timestamp, tn timestamp_ntz")
+    out = str(tmp_path / "pgs")
+    (df.repartitionByRange(4, "t").write.format("pgs").mode("overwrite")
+     .option("page_rows", "32").save(out))
+    parts = spark.read.format("pgs").load(out).rdd.getNumPartitions()
+    assert parts == 4
+
+    def pushed(cond):
+        return spark.read.format("pgs").option("pushdown", "true") \
+            .load(out).filter(cond)
+
+    for trial in range(12):
+        col = ("d", "t", "tn")[trial % 3]
+        a, b = sorted(day0 + dt.timedelta(days=int(x))
+                      for x in rng.integers(-5, 125, 2))
+        lo, hi = (a, b) if col == "d" else (
+            dt.datetime(a.year, a.month, a.day),
+            dt.datetime(b.year, b.month, b.day, 12))
+        cond = [F.col(col) == F.lit(lo), F.col(col).isin(F.lit(lo), F.lit(hi)),
+                F.col(col).between(F.lit(lo), F.lit(hi)),
+                F.col(col) > F.lit(hi)][trial % 4]
+        got = sorted(map(_key, pushed(cond).collect()))
+        assert got == sorted(map(_key, df.filter(cond).collect())), cond
+    # a range inside the first zone's days reads fewer parts
+    first = dt.datetime(2019, 12, 5)
+    for col, v in (("d", first.date()), ("t", first), ("tn", first)):
+        q = pushed(F.col(col) < F.lit(v))
+        assert 0 < q.rdd.getNumPartitions() < parts, col
+        assert q.count() == df.filter(F.col(col) < F.lit(v)).count()

@@ -390,3 +390,27 @@ def test_nested_logical_types_reach_the_file(tmp_path):
                        "m.key_value.key": "UUID",
                        "m.key_value.value": "JSON", "st.u": "UUID"}
     assert P.decode_table(p).to_pylist() == t.to_pylist()
+
+
+def test_int96_declaration_writes_physical_int96(tmp_path):
+    """``type=INT96`` reaches the file as physical INT96; a declared
+    INT64 nanosecond timestamp beside it stays INT64."""
+    import datetime as dt
+
+    decl = parse_csv_metadata([
+        "name=legacy, type=INT96",
+        "name=modern, type=INT64, logicaltype=TIMESTAMP, "
+        "logicaltype.unit=NANOS",
+    ])
+    assert decl.schema.field("legacy").type == pa.timestamp("ns")
+    assert decl.writer_kwargs()["int96_timestamps"] == {"legacy"}
+    ts = [dt.datetime(2021, 3, 4, 5, 6, 7, 891011), None]
+    t = pa.table({"legacy": pa.array(ts, pa.timestamp("ns")),
+                  "modern": pa.array(ts, pa.timestamp("ns"))},
+                 schema=decl.schema)
+    f = str(tmp_path / "int96.parquet")
+    W.write_table(t, f, **decl.writer_kwargs())
+    cols = pq.ParquetFile(f).metadata.row_group(0)
+    assert [cols.column(i).physical_type for i in range(2)] == [
+        "INT96", "INT64"]
+    assert pq.read_table(f).column("legacy").to_pylist() == ts

@@ -523,8 +523,14 @@ def main() -> int:
     enc.add_argument("--target-tokens", type=int, default=None,
                      help="tokens per row group (default: the engine's "
                           "cluster-scale DEFAULT_TARGET_TOKENS)")
-    enc.add_argument("--waves", type=int, default=1)
-    enc.add_argument("--no-resume", action="store_true")
+    enc.add_argument("--waves", type=int, default=1,
+                     help="commit units: wave w is the rows with "
+                          "pmod(xxhash64(doc_id), waves) == w, one Spark "
+                          "write each; a rerun skips complete waves and "
+                          "re-encodes partial ones (same --waves needed)")
+    enc.add_argument("--no-resume", action="store_true",
+                     help="encode every wave without looking at what the "
+                          "store already holds")
     enc.add_argument("--compression", default="zstd")
     enc.add_argument("--codec-map", default=None,
                      help='per-column codec override as JSON, e.g. '
